@@ -8,7 +8,8 @@ Modes (first CLI arg):
                         entries) with the noop sink, best-of-2, and
                         write plans/r06/<name>_{before|after}.txt
                         explain("formatted") snapshots (phase from
-                        $EFIN_PLAN_PHASE, default "before").
+                        $EFIN_PLAN_PHASE, "before" or "after"; required,
+                        so a rerun cannot overwrite the other phase).
   kg                  — stage-clocked KG pipeline run (the bench.py
                         part 2 shape) with job descriptions.
   oracle [names...]   — Spark-vs-DuckDB comparison for the named
@@ -18,6 +19,7 @@ Modes (first CLI arg):
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 import time
 
@@ -25,7 +27,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-PHASE = os.environ.get("EFIN_PLAN_PHASE", "before")
 PLAN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "plans", "r06")
 
@@ -59,11 +60,20 @@ def _warmup(spark):
         spark.read.parquet(os.path.join(SF_DIR, f"{t}.parquet")).count()
 
 
+def _plan_phase() -> str:
+    phase = os.environ.get("EFIN_PLAN_PHASE")
+    if phase not in ("before", "after"):
+        raise SystemExit("set EFIN_PLAN_PHASE=before or after: it names the "
+                         "plans/r06/*_<phase>.txt snapshots this mode writes")
+    return phase
+
+
 def run_queries(names):
     import json
 
     from edgar_finance_ontology_spark.queries import QUERIES
 
+    phase = _plan_phase()
     os.makedirs(PLAN_DIR, exist_ok=True)
     spark = _session("efin-bench-extra")
     _warmup(spark)
@@ -84,11 +94,11 @@ def run_queries(names):
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 fn(spark, SF_DIR).explain("formatted")
-            with open(os.path.join(PLAN_DIR, f"{name}_{PHASE}.txt"),
+            with open(os.path.join(PLAN_DIR, f"{name}_{phase}.txt"),
                       "w") as f:
                 f.write(buf.getvalue())
         print(f"{out[name]:8.3f}  {name}", flush=True)
-    print(json.dumps({"phase": PHASE, "noop_sec": out,
+    print(json.dumps({"phase": phase, "noop_sec": out,
                       "total": round(sum(out.values()), 3)}))
     spark.stop()
 
@@ -103,6 +113,7 @@ def run_plans(names):
 
     from edgar_finance_ontology_spark.queries import QUERIES
 
+    phase = _plan_phase()
     os.makedirs(PLAN_DIR, exist_ok=True)
     spark = _session("efin-plan-snap")
     for name in names:
@@ -111,9 +122,9 @@ def run_plans(names):
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             fn(spark, SF_DIR).explain("formatted")
-        with open(os.path.join(PLAN_DIR, f"{name}_{PHASE}.txt"), "w") as f:
+        with open(os.path.join(PLAN_DIR, f"{name}_{phase}.txt"), "w") as f:
             f.write(buf.getvalue())
-        print(f"plan {PHASE}: {name}", flush=True)
+        print(f"plan {phase}: {name}", flush=True)
     spark.stop()
 
 
@@ -292,7 +303,7 @@ def run_cq():
     slowest = {n: per[n] for n in
                sorted(per, key=per.get, reverse=True)[:8]}
     print({"register_sec": round(reg, 3), "cq_wall_sec": round(wall, 3),
-           "median": sorted(per.values())[len(per) // 2],
+           "median": statistics.median(per.values()),
            "slowest": slowest}, flush=True)
     spark.stop()
 

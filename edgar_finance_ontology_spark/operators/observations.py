@@ -3,12 +3,14 @@
 Reference: the per-company loop select_xbrl_tags.py:2899-2984 plus
 compute_growth_set (:2289-2501) and compute_other_derived (:2504-2657).
 
-Spark shape: ONE batched selection pass produces every (company, spec)
-result; a single pivot per cik yields a wide provenance frame (struct
-column per spec); every growth/derived formula is then pure column
-arithmetic over that frame; finally the wide frame unpivots into the
-long observation table in the reference's emission order. Two shuffles
-total (selection windows + pivot), no UDFs, no driver loops.
+Spark shape: ONE selection pass (select_candidates) produces every
+(company, spec) result — base, relaxed prior-year and fy-1 fallback
+picks alike — and the direct-growth miner adds one pick per growth
+metric; a pivot per cik yields a wide provenance frame (struct column
+per spec); every growth/derived formula is then pure column arithmetic
+over that frame; finally the wide frame unpivots into the long
+observation table in the reference's emission order. No UDFs, no
+driver loops.
 """
 
 from __future__ import annotations
@@ -23,12 +25,7 @@ from ..vocab.metrics import (
     INSTANT_BASE_METRICS,
     METRIC_EMISSION_ORDER,
 )
-from .selection import (
-    select_direct_growth,
-    select_prior_relaxed,
-    select_standard,
-    specs_df,
-)
+from .selection import select_candidates, select_direct_growth, specs_df
 
 # growth metric -> (base metric, reason label, normalized-using text)
 GROWTH_SPEC = {
@@ -69,17 +66,21 @@ def _base_specs(fy: int, tol_days: int) -> list[dict]:
 
 
 def _gprior_specs(fy: int, tol_days: int) -> list[dict]:
-    # compute_growth_set's prior-year lookups (select_xbrl_tags.py:2298-2305)
-    return [
-        {"spec_id": "g_Revenue", "metric": "Revenue", "fy": fy,
-         "tol_days": tol_days, "period_type": "duration"},
-        {"spec_id": "g_NetIncome", "metric": "NetIncome", "fy": fy,
-         "tol_days": tol_days, "period_type": "duration"},
-        {"spec_id": "g_CFO", "metric": "CFO", "fy": fy,
-         "tol_days": tol_days, "period_type": "duration"},
-        {"spec_id": "g_Assets", "metric": "Assets", "fy": fy,
-         "tol_days": 120, "period_type": "instant"},
-    ]
+    """compute_growth_set's prior-year lookups
+    (select_xbrl_tags.py:2298-2305), each as two passes: the relaxed
+    pick at fy, then standard selection at fy-1 over the escalating
+    base tolerances (_select_prior_year_with_fallback, :2190-2195)."""
+    specs = []
+    for m, tol, period in (("Revenue", tol_days, "duration"),
+                           ("NetIncome", tol_days, "duration"),
+                           ("CFO", tol_days, "duration"),
+                           ("Assets", 120, "instant")):
+        s = {"spec_id": f"g_{m}", "metric": m, "fy": fy, "tol_days": tol,
+             "period_type": period}
+        specs.append({**s, "kind": "relaxed"})
+        specs.append({**s, "fy": fy - 1, "prec": 1,
+                      "ladder": (180, 240, 300, 360, 420, 540)})
+    return specs
 
 
 def _pivot_results(results: DataFrame, spec_ids: list[str]) -> DataFrame:
@@ -118,16 +119,11 @@ def build_wide(facts: DataFrame, companies: DataFrame, fy: int,
                tol_days: int = 90, prefer_unit: str = "USD") -> DataFrame:
     """One row per cik with a struct column per selection spec plus the
     direct-growth picks (dg_<metric> structs)."""
-    spark = facts.sparkSession
-    base = _base_specs(fy, tol_days)
-    res_std = select_standard(
-        facts, companies, specs_df(spark, base), prefer_unit
+    specs = _base_specs(fy, tol_days) + _gprior_specs(fy, tol_days)
+    res = select_candidates(
+        facts, companies, specs_df(facts.sparkSession, specs), prefer_unit
     )
-    res_gp = select_prior_relaxed(
-        facts, companies, specs_df(spark, _gprior_specs(fy, tol_days)), prefer_unit
-    )
-    all_ids = [s["spec_id"] for s in base] + [s["spec_id"] for s in _gprior_specs(fy, tol_days)]
-    wide = _pivot_results(res_std.unionByName(res_gp), all_ids)
+    wide = _pivot_results(res, list(dict.fromkeys(s["spec_id"] for s in specs)))
 
     dg = select_direct_growth(facts, companies, fy, tol_days, prefer_unit)
     dg_struct = F.struct("qname", "value", "unit", "end", "form", "accn", "score")
@@ -530,6 +526,7 @@ def build_observations(
         rev_s["accn"].alias("accn"),
         F.lit(0.60).alias("confidence"),
     )
+    assert not {"stx", "cogx"} & set(wide.columns), "reserved wide columns"
     wide = wide.select(
         "*",
         F.coalesce(

@@ -1,27 +1,42 @@
-"""Candidate selection: the reference's per-company fallback ladder as
-ONE set-oriented Spark job.
+"""Candidate selection: the reference's per-company fallback ladders as
+ONE set-oriented Spark pass.
 
 Reference shape (select_xbrl_tags.py:1813-1916): for each company ×
 metric, loop widen ∈ (0,60,120,180) × candidates × pick_best_annual
 (pass1 fp∈FY/CY/FYR → pass2 qtrs==4 → pass3 lenient, each smart_pick =
 argmax(-dist+5·fp_bonus, end)), early-exiting at the first widen level
-with any hit, then argmax candidate score.
+with any hit, then argmax candidate score. Prior-year growth inputs
+(select_xbrl_tags.py:2030-2195) first try a relaxed pick (no sector
+gate, first candidate in list order with any record near the prior
+fiscal end), then fall back to the standard ladder at fy-1 over
+escalating base tolerances.
 
-Set-oriented equivalence (proved by the early-exit structure, not by
-score monotonicity — the widen penalty is a flat 0.02):
-  1. admit a record iff dist ≤ tol+180 (the widest rung);
-  2. w* per (company, metric) = the smallest widen rung admitting ANY
-     record — because tolerance windows are nested, the ladder's first
-     hit happens exactly at w*;
-  3. eligible = records admitted at w*; per-qname pass = min pass rank
-     among eligible; per-qname winner = argmax(smart score, end, pool
-     order); per-metric winner = argmax(candidate score, end, list ord).
+Each pass is a row of the spec table, not a code path: `kind`
+(standard | relaxed), `ladder` (base-tolerance steps) and `prec` (pass
+precedence within a spec_id).
+
+Set-oriented equivalence of a standard pass (proved by the early-exit
+structure, not by score monotonicity — the widen penalty is a flat
+0.02):
+  1. admit a record iff dist ≤ tol+max(ladder)+180 (the widest rung);
+  2. step* = the first ladder step whose widest rung admits d_min, and
+     w* = the first widen rung admitting d_min within step* — because
+     tolerance windows are nested, the ladder's first hit happens
+     exactly there;
+  3. eligible = records admitted at (step*, w*); per-qname pass = min
+     pass rank among eligible; per-qname winner = argmax(smart score,
+     end, pool order); per-spec winner = argmax(candidate score, end,
+     list order).
+A relaxed pass keeps the first candidate with any record in its window
+and picks the record nearest the prior fiscal end. The final argmax per
+(cik, spec_id) orders by `prec` first, so a fallback row only wins when
+no earlier pass produced one.
 
 Physical plan: facts ⋈ broadcast(candidates × specs) ⋈
-broadcast(companies) → three window functions over
-(cik, spec[, qname]). One shuffle on (cik, spec_id, qname) — the
-windows share the partition key prefix, so Catalyst reuses a single
-exchange; no per-company loops, no UDFs.
+broadcast(companies) → window functions over (cik, spec_id, prec[,
+qname]) and a final (cik, spec_id) argmax. One join, one shuffle —
+every window shares the (cik, spec_id) partitioning — no per-company
+loops, no UDFs.
 
 At 10^12-row scale: the fact table arrives hash-partitioned by cik
 bucket, the candidate/spec/company sides are broadcast, and AQE
@@ -33,23 +48,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.dates import fiscal_anchor_cols, fye_month_day, parse_date_col
+from ..functions.dates import fiscal_anchor_cols, parse_date_col
 from ..functions.scoring import clamp01, score_adj_col, typ_bonus_col
 from ..vocab.candidates import candidates_df
 
 WIDEN_RUNGS = (0, 60, 120, 180)
 
-# SELECTION RESULT columns every selector emits.
-RESULT_COLS = [
-    "cik", "spec_id", "metric", "source_type", "qname", "value", "unit",
-    "end", "form", "accn", "confidence",
-]
-
 
 def specs_df(spark, specs: list[dict]) -> DataFrame:
-    """specs: [{spec_id, metric, fy, tol_days, period_type}]"""
+    """specs: [{spec_id, metric, fy, tol_days, period_type[, kind,
+    ladder, prec]}]; kind defaults to "standard", ladder to [0] and
+    prec to 0."""
     from pyspark.sql.types import (
-        IntegerType, StringType, StructField, StructType,
+        ArrayType, IntegerType, StringType, StructField, StructType,
     )
 
     schema = StructType([
@@ -58,9 +69,14 @@ def specs_df(spark, specs: list[dict]) -> DataFrame:
         StructField("fy", IntegerType(), False),
         StructField("tol_days", IntegerType(), False),
         StructField("period_type", StringType(), False),
+        StructField("kind", StringType(), False),
+        StructField("ladder", ArrayType(IntegerType(), False), False),
+        StructField("prec", IntegerType(), False),
     ])
     rows = [
-        (s["spec_id"], s["metric"], s["fy"], s["tol_days"], s["period_type"])
+        (s["spec_id"], s["metric"], s["fy"], s["tol_days"], s["period_type"],
+         s.get("kind", "standard"), list(s.get("ladder", (0,))),
+         s.get("prec", 0))
         for s in specs
     ]
     return spark.createDataFrame(rows, schema)
@@ -77,30 +93,6 @@ def _pool_order_cols(prefer_unit: str):
         F.col("unit").asc(),
         F.col("rec_pos").asc(),
     ]
-
-
-def _join_candidates(
-    facts: DataFrame,
-    companies: DataFrame,
-    specs: DataFrame,
-    sector_gate: bool,
-) -> DataFrame:
-    spark = facts.sparkSession
-    cands = candidates_df(spark)
-    cand_specs = specs.join(cands, "metric")  # tiny × tiny
-    comp = companies.select("cik", "sector", "fye")
-    j = (
-        facts.join(F.broadcast(cand_specs), "qname")
-        .join(F.broadcast(comp), "cik")
-    )
-    if sector_gate:
-        j = j.where(
-            F.col("industry_only").isNull()
-            | F.array_contains(F.col("industry_only"), F.col("sector"))
-        )
-    return j.withColumn("end_d", parse_date_col(F.col("end"))).where(
-        F.col("end_d").isNotNull() & F.col("val").isNotNull()
-    )
 
 
 def _passes_and_smart_score(df: DataFrame) -> DataFrame:
@@ -128,8 +120,95 @@ def _passes_and_smart_score(df: DataFrame) -> DataFrame:
     return out
 
 
-def _candidate_score(widen_penalty_expr, relaxed_penalty: float = 0.0):
-    base = (
+def select_candidates(
+    facts: DataFrame,
+    companies: DataFrame,
+    specs: DataFrame,
+    prefer_unit: str = "USD",
+) -> DataFrame:
+    """Every (company, spec) pick of every pass at once: one argmax per
+    (cik, spec_id) over the spec rows' passes (see module docstring)."""
+    cands = candidates_df(facts.sparkSession)
+    cand_specs = specs.join(F.broadcast(cands), "metric")
+    comp = companies.select("cik", "sector", "fye")
+    std = F.col("kind") == "standard"
+    j = (
+        facts.join(F.broadcast(cand_specs), "qname")
+        .join(F.broadcast(comp), "cik")
+        .where(
+            ~std
+            | F.col("industry_only").isNull()
+            | F.array_contains(F.col("industry_only"), F.col("sector"))
+        )
+        .withColumn("end_d", parse_date_col(F.col("end")))
+        .where(F.col("end_d").isNotNull() & F.col("val").isNotNull())
+    )
+
+    # standard: distance to the nearer fiscal end of fy / fy+1, admitted
+    # up to the widest rung of the last ladder step; relaxed: inside the
+    # ±180d window around the fy-2..fy ends, distance to the fy-1 end
+    a1, a2 = fiscal_anchor_cols(F.col("fy"), F.col("fye"))
+    p2, p1 = fiscal_anchor_cols(F.col("fy") - 2, F.col("fye"))
+    j = j.withColumn(
+        "dist",
+        F.when(std, F.least(F.abs(F.datediff("end_d", a1)),
+                            F.abs(F.datediff("end_d", a2))))
+        .otherwise(F.abs(F.datediff("end_d", p1))),
+    ).where(
+        F.when(std, F.col("dist") <= F.col("tol_days")
+               + F.array_max("ladder") + 180)
+        .otherwise(F.col("end_d").between(
+            F.date_add(p2, 1 - 180), F.date_add(a1, 180)
+        ))
+    )
+
+    # every window below is keyed by a (cik, spec_id) prefix: shuffle
+    # once on it, or Catalyst would add a second exchange for the
+    # final argmax
+    j = j.repartition("cik", "spec_id")
+    w_pass = Window.partitionBy("cik", "spec_id", "prec")
+    j = j.withColumn("d_min", F.min("dist").over(w_pass)).withColumn(
+        "cand_win", F.min("cand_ord").over(w_pass)
+    )
+    # step* = first ladder step whose widest rung admits d_min;
+    # w* = first widen rung admitting d_min within step*
+    j = j.withColumn("step_star", F.when(std, F.filter(
+        "ladder",
+        lambda s: F.col("d_min") <= F.col("tol_days") + s + 180,
+    )[0]))
+    w_expr = None
+    for w in WIDEN_RUNGS:
+        cond = F.col("d_min") <= F.col("tol_days") + F.col("step_star") + F.lit(w)
+        w_expr = F.when(cond, F.lit(w)) if w_expr is None else w_expr.when(cond, F.lit(w))
+    j = j.withColumn("w_star", w_expr).where(
+        F.when(std, F.col("dist") <= F.col("tol_days") + F.col("step_star")
+               + F.col("w_star"))
+        .otherwise(F.col("cand_ord") == F.col("cand_win"))
+    )
+
+    j = _passes_and_smart_score(j)
+
+    # per-qname: keep only the best pass present, then the record pick —
+    # standard: smart_pick argmax (score, end); relaxed: strict min
+    # distance; ties keep the earliest pool record
+    w_qname = Window.partitionBy("cik", "spec_id", "prec", "qname")
+    j = j.withColumn("min_pass", F.min("pass_rank").over(w_qname)).where(
+        F.col("pass_rank") == F.col("min_pass")
+    )
+    rec_rank = F.row_number().over(
+        w_qname.orderBy(
+            F.when(std, F.col("smart_score")).otherwise(-F.col("dist")).desc(),
+            F.when(std, F.col("end_d")).desc(),
+            *_pool_order_cols(prefer_unit),
+        )
+    )
+    j = j.withColumn("rec_rank", rec_rank).where(F.col("rec_rank") == 1)
+
+    # candidate score + per-spec argmax, earliest pass first (round to
+    # absorb float-order noise; the reference compares with
+    # math.isclose, select_xbrl_tags.py:1890). A relaxed row subtracts
+    # a zero widen penalty, then its flat 0.05.
+    score = (
         F.col("base_score")
         + F.when(F.col("period_type") == "instant", F.lit(0.0)).otherwise(
             typ_bonus_col(F.col("typ"))
@@ -137,82 +216,13 @@ def _candidate_score(widen_penalty_expr, relaxed_penalty: float = 0.0):
         + score_adj_col(
             F.col("form"), F.col("unit"), F.col("fp_eff"), F.col("has_segment")
         )
-        - widen_penalty_expr
-        - F.lit(relaxed_penalty)
+        - F.when(F.col("w_star") > 0, F.lit(0.02)).otherwise(F.lit(0.0))
+        - F.when(std, F.lit(0.0)).otherwise(F.lit(0.05))
     )
-    return base
-
-
-def select_standard(
-    facts: DataFrame,
-    companies: DataFrame,
-    specs: DataFrame,
-    prefer_unit: str = "USD",
-    tol_ladder_steps: tuple[int, ...] = (0,),
-) -> DataFrame:
-    """select_base_duration / select_base_instant for every (company,
-    spec) pair at once. `tol_ladder_steps` generalizes the prior-year
-    fallback's escalating base tolerances
-    (select_xbrl_tags.py:2190-2195): the first step admitting any
-    record is used, then the widen ladder runs inside it.
-    """
-    j = _join_candidates(facts, companies, specs, sector_gate=True)
-
-    a1, a2 = fiscal_anchor_cols(F.col("fy"), F.col("fye"))
-    j = j.withColumn(
-        "dist",
-        F.least(F.abs(F.datediff("end_d", a1)), F.abs(F.datediff("end_d", a2))),
-    )
-
-    # Admission: dist <= max_step + tol + 180; d_min drives (step*, w*).
-    max_step = max(tol_ladder_steps)
-    j = j.where(F.col("dist") <= F.col("tol_days") + max_step + 180)
-
-    w_spec = Window.partitionBy("cik", "spec_id")
-    j = j.withColumn("d_min", F.min("dist").over(w_spec))
-
-    # step* = first ladder step whose widest rung admits d_min
-    step_expr = None
-    for s in tol_ladder_steps:
-        cond = F.col("d_min") <= F.col("tol_days") + F.lit(s) + 180
-        step_expr = (
-            F.when(cond, F.lit(s)) if step_expr is None else step_expr.when(cond, F.lit(s))
-        )
-    j = j.withColumn("step_star", step_expr)
-
-    # w* = first widen rung admitting d_min within step*
-    w_expr = None
-    for w in WIDEN_RUNGS:
-        cond = F.col("d_min") <= F.col("tol_days") + F.col("step_star") + F.lit(w)
-        w_expr = F.when(cond, F.lit(w)) if w_expr is None else w_expr.when(cond, F.lit(w))
-    j = j.withColumn("w_star", w_expr)
-
-    j = j.where(
-        F.col("dist") <= F.col("tol_days") + F.col("step_star") + F.col("w_star")
-    )
-
-    j = _passes_and_smart_score(j)
-
-    # per-qname: keep only the best pass present, then smart_pick argmax
-    w_qname = Window.partitionBy("cik", "spec_id", "qname")
-    j = j.withColumn("min_pass", F.min("pass_rank").over(w_qname)).where(
-        F.col("pass_rank") == F.col("min_pass")
-    )
-    rec_rank = F.row_number().over(
-        w_qname.orderBy(
-            F.col("smart_score").desc(), F.col("end_d").desc(),
-            *_pool_order_cols(prefer_unit),
-        )
-    )
-    j = j.withColumn("rec_rank", rec_rank).where(F.col("rec_rank") == 1)
-
-    # candidate score + per-spec argmax (round to absorb float-order
-    # noise; the reference compares with math.isclose,
-    # select_xbrl_tags.py:1890)
-    widen_pen = F.when(F.col("w_star") > 0, F.lit(0.02)).otherwise(F.lit(0.0))
-    j = j.withColumn("score", _candidate_score(widen_pen))
+    j = j.withColumn("score", score)
     cand_rank = F.row_number().over(
-        w_spec.orderBy(
+        Window.partitionBy("cik", "spec_id").orderBy(
+            F.col("prec").asc(),
             F.round(F.col("score"), 9).desc(),
             F.col("end_d").desc(),
             F.col("cand_ord").asc(),
@@ -228,82 +238,6 @@ def select_standard(
         "unit", "end", "form", "accn",
         clamp01(F.col("score")).alias("confidence"),
     )
-
-
-def select_prior_relaxed(
-    facts: DataFrame,
-    companies: DataFrame,
-    specs: DataFrame,
-    prefer_unit: str = "USD",
-) -> DataFrame:
-    """_pick_prior_year_relaxed + _select_prior_year_with_fallback
-    (select_xbrl_tags.py:2030-2195) set-oriented.
-
-    Relaxed phase: NO sector gate, candidates tried in list order and
-    the FIRST candidate with any record in the ±180d prior-year window
-    wins (not best-score); within it, pass1/2/3 then min distance to
-    the prior fiscal anchor (ties keep pool order). Fallback phase:
-    standard selection at fy-1 over the escalating tolerance ladder.
-    """
-    # ---- relaxed phase ----
-    j = _join_candidates(facts, companies, specs, sector_gate=False)
-    mm, dd = fye_month_day(F.col("fye"))
-    prior_fye = F.coalesce(
-        F.make_date(F.col("fy") - 1, mm, dd),
-        F.make_date(F.col("fy") - 1, F.lit(12), F.lit(31)),
-    )
-    win_start = F.date_add(
-        F.coalesce(
-            F.make_date(F.col("fy") - 2, mm, dd),
-            F.make_date(F.col("fy") - 2, F.lit(12), F.lit(31)),
-        ),
-        1 - 180,
-    )
-    win_end = F.date_add(
-        F.coalesce(
-            F.make_date(F.col("fy"), mm, dd),
-            F.make_date(F.col("fy"), F.lit(12), F.lit(31)),
-        ),
-        180,
-    )
-    j = j.where(F.col("end_d").between(win_start, win_end))
-    j = j.withColumn("dist", F.abs(F.datediff("end_d", prior_fye)))
-
-    w_spec = Window.partitionBy("cik", "spec_id")
-    j = j.withColumn("cand_win", F.min("cand_ord").over(w_spec)).where(
-        F.col("cand_ord") == F.col("cand_win")
-    )
-    j = _passes_and_smart_score(j)
-    w_qname = Window.partitionBy("cik", "spec_id", "qname")
-    j = j.withColumn("min_pass", F.min("pass_rank").over(w_qname)).where(
-        F.col("pass_rank") == F.col("min_pass")
-    )
-    # strict min-dist pick; ties keep the earliest pool record
-    rec_rank = F.row_number().over(
-        w_qname.orderBy(F.col("dist").asc(), *_pool_order_cols(prefer_unit))
-    )
-    j = j.withColumn("rec_rank", rec_rank).where(F.col("rec_rank") == 1)
-    j = j.withColumn("score", _candidate_score(F.lit(0.0), relaxed_penalty=0.05))
-
-    relaxed = j.select(
-        "cik", "spec_id", "metric",
-        F.col("typ").alias("source_type"),
-        "qname",
-        F.col("val").alias("value"),
-        "unit", "end", "form", "accn",
-        clamp01(F.col("score")).alias("confidence"),
-    )
-
-    # ---- fallback phase: standard at fy-1, tol ladder +180..+540 ----
-    specs_prev = specs.withColumn("fy", F.col("fy") - 1)
-    fallback = select_standard(
-        facts, companies, specs_prev, prefer_unit,
-        tol_ladder_steps=(180, 240, 300, 360, 420, 540),
-    )
-    fallback = fallback.join(
-        relaxed.select("cik", "spec_id"), ["cik", "spec_id"], "left_anti"
-    )
-    return relaxed.unionByName(fallback)
 
 
 def select_direct_growth(
@@ -332,19 +266,14 @@ def select_direct_growth(
     ]
     pats = spark.createDataFrame(pat_rows, "gmetric string, pattern string, tol int")
 
-    qnames = facts.select("cik", "qname").distinct()
-    mined = (
-        qnames.crossJoin(F.broadcast(pats))
-        .where(F.expr("qname rlike pattern"))
-    )
+    j = facts.join(F.broadcast(pats), F.expr("qname rlike pattern"))
     bl = F.upper(F.col("qname"))
     for kw in DIRECT_GROWTH_BLACKLIST:
-        mined = mined.where(~bl.contains(kw.upper()))
+        j = j.where(~bl.contains(kw.upper()))
 
     comp = companies.select("cik", "fye")
     j = (
-        facts.join(mined.select("cik", "qname", "gmetric", "tol"), ["cik", "qname"])
-        .join(F.broadcast(comp), "cik")
+        j.join(F.broadcast(comp), "cik")
         .withColumn("end_d", parse_date_col(F.col("end")))
         .where(F.col("end_d").isNotNull() & F.col("val").isNotNull())
         .withColumn("period_type", F.lit("duration"))
@@ -355,7 +284,8 @@ def select_direct_growth(
         F.least(F.abs(F.datediff("end_d", a1)), F.abs(F.datediff("end_d", a2))),
     ).where(F.col("dist") <= F.col("tol"))
 
-    j = _passes_and_smart_score(j)
+    # one shuffle serves both window keys below
+    j = _passes_and_smart_score(j).repartition("cik", "gmetric")
     w_qname = Window.partitionBy("cik", "gmetric", "qname")
     j = j.withColumn("min_pass", F.min("pass_rank").over(w_qname)).where(
         F.col("pass_rank") == F.col("min_pass")

@@ -60,8 +60,8 @@ def run_pipeline(
     than this through the distributed exact-stats path (same numbers,
     no per-group list buffer) — see operators/benchmarks.py."""
     # materialize + truncate the (possibly expensively derived) inputs:
-    # selection scans facts three times (standard / relaxed / direct-
-    # growth) and every scan would re-analyze the web-parse plan.
+    # selection scans facts twice (candidate passes / direct-growth
+    # mining) and every scan would re-analyze the web-parse plan.
     # localCheckpoint is the local-mode stand-in for a reliable
     # checkpoint (on a cluster: write the stage table, plans/lineage.py)
     facts = facts.localCheckpoint(eager=True)

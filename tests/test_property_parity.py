@@ -131,7 +131,7 @@ def test_selection_ladder_fuzz(spark, seed):
     selection must equal the reference's per-company ladder for every
     (company, metric)."""
     from edgar_finance_ontology_spark.operators.selection import (
-        select_standard, specs_df,
+        select_candidates, specs_df,
     )
     from edgar_finance_ontology_spark.sources.facts import (
         explode_facts, read_companyfacts_json,
@@ -184,16 +184,17 @@ def test_selection_ladder_fuzz(spark, seed):
         "symbol string, cik string, name string, sector string, "
         "industry string, sic string, sic_description string, fye string",
     )
+    std = {"fy": 2024, "kind": "standard", "ladder": (0,), "prec": 0}
     specs = [
-        {"spec_id": f"b_{m}", "metric": m, "fy": 2024, "tol_days": 90,
+        {**std, "spec_id": f"b_{m}", "metric": m, "tol_days": 90,
          "period_type": "duration"} for m in SELECTION_METRICS_DUR
     ] + [
-        {"spec_id": f"b_{m}", "metric": m, "fy": 2024, "tol_days": 120,
+        {**std, "spec_id": f"b_{m}", "metric": m, "tol_days": 120,
          "period_type": "instant"} for m in SELECTION_METRICS_INST
     ]
     got = {
         (r["cik"], r["spec_id"]): r
-        for r in select_standard(facts, comp_df, specs_df(spark, specs)).collect()
+        for r in select_candidates(facts, comp_df, specs_df(spark, specs)).collect()
     }
 
     mismatches = []
