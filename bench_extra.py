@@ -14,6 +14,11 @@ Modes (first CLI arg):
                         part 2 shape) with job descriptions.
   oracle [names...]   — Spark-vs-DuckDB comparison for the named
                         queries (result parity guard while optimizing).
+  obsplan [seed]      — three same-session build_observations rounds on
+                        the 12-company perfbench panel (default seed 1):
+                        construct / optimize / execute seconds, codegen
+                        compiles, emission expression chars and output
+                        digests per round.
 """
 
 from __future__ import annotations
@@ -344,6 +349,62 @@ def run_oracle(names):
     sys.exit(0 if ok else 1)
 
 
+def run_obsplan(seed: int = 1):
+    """Where build_observations spends its time, round by round, in one
+    session shaped like perfbench's (local[half the cores])."""
+    import hashlib
+    import json
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from edgar_finance_ontology_spark.operators.observations import (
+        _emission_entries, build_observations,
+    )
+    from edgar_finance_ontology_spark.plans.web_pipeline import (
+        pages_to_inputs,
+    )
+    from edgar_finance_ontology_spark.session import build_session
+    from perfbench.inputs import FY, page_rows, write_pages
+
+    cpus = max(1, (os.cpu_count() or 1) // 2)
+    spark = build_session("efin-obsplan", master=f"local[{cpus}]",
+                          shuffle_partitions=cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    with tempfile.TemporaryDirectory() as work:
+        write_pages(page_rows(12, seed), f"{work}/pages")
+        facts, companies = pages_to_inputs(spark.read.parquet(f"{work}/pages"))
+        facts = facts.localCheckpoint(eager=True)
+        companies = companies.localCheckpoint(eager=True)
+        for rnd in range(1, 4):
+            compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
+            t0 = time.monotonic()
+            obs = build_observations(facts, companies, FY, 90, "USD", True)
+            t1 = time.monotonic()
+            qe = obs._jdf.queryExecution()
+            qe.optimizedPlan()
+            qe.executedPlan()
+            t2 = time.monotonic()
+            obs = obs.localCheckpoint(eager=True)
+            t3 = time.monotonic()
+            compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles0
+            chars = sum(len(c._jc.toString())
+                        for c in _emission_entries(("all",), True, False))
+            h = obs.agg(F.count(F.lit(1)), F.sum(
+                F.xxhash64(*obs.columns).cast("decimal(38,0)"))).first()
+            sha = hashlib.sha256(
+                repr([tuple(r) for r in obs.collect()]).encode()).hexdigest()
+            print(json.dumps({
+                "round": rnd, "construct_s": round(t1 - t0, 3),
+                "optimize_s": round(t2 - t1, 3),
+                "execute_s": round(t3 - t2, 3),
+                "codegen_compiles": compiles, "emission_chars": chars,
+                "rows": h[0], "xxhash64_sum": str(h[1]), "sha256": sha,
+            }), flush=True)
+    spark.stop()
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     args = sys.argv[2:]
@@ -365,6 +426,8 @@ if __name__ == "__main__":
         run_cq()
     elif mode == "kgdeep":
         run_kg_deep()
+    elif mode == "obsplan":
+        run_obsplan(int(args[0]) if args else 1)
     elif mode == "oracle":
         from edgar_finance_ontology_spark.queries import QUERIES
 

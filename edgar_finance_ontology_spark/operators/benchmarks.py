@@ -81,16 +81,24 @@ def _group_stats(values: pd.Series) -> pd.DataFrame:
 def _key_metric_values(observations: DataFrame) -> DataFrame:
     """KEY-metric rows with CSV-round-tripped values (%.6f write +
     float() parse, exact-binary rounding) and finite guard
-    (select_xbrl_tags.py:640-668)."""
+    (select_xbrl_tags.py:640-668).
+
+    The guard tests the raw value: the round trip maps null/NaN to
+    null and ±inf to itself, and keeps every finite double finite, so
+    it drops the same rows as a guard on the rounded value. The rounding
+    UDF then runs once, in the select; a filter on its output would be
+    pushed below that select with the UDF inlined, a second Python
+    pass over the same rows."""
     from ..functions.iri import py_round6_col
 
-    v = py_round6_col(F.col("value"))
+    v = F.col("value")
     return observations.where(
         (F.col("industry") != "") & F.col("industry").isNotNull()
         & F.col("metric").isin(*BENCHMARK_RANKING_METRICS)
         & v.isNotNull() & ~F.isnan(v)
         & (v != float("inf")) & (v != float("-inf"))
-    ).select("cik", "symbol", "industry", "sector", "metric", v.alias("value"))
+    ).select("cik", "symbol", "industry", "sector", "metric",
+             py_round6_col(v).alias("value"))
 
 
 def compute_benchmarks(

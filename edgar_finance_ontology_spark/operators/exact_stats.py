@@ -73,32 +73,33 @@ def exact_group_stats(df: DataFrame, group_col: str, value_col: str,
         df.select(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
         .where(F.col("v").isNotNull())
     )
-    if driver_cap:
-        counts0 = d0.groupBy("g").count().collect()
-        if sum(r["count"] for r in counts0) <= driver_cap:
-            by_group: dict = {}
-            for r in d0.collect():
-                by_group.setdefault(r["g"], []).append(float(r["v"]))
-            rows = []
-            for g in sorted(by_group):
-                vs = sorted(by_group[g])
-                n = len(vs)
-                if n < min_n:
-                    continue
-                rows.append({
-                    "group": g,
-                    "n": n,
-                    "average": statistics.mean(vs),
-                    "median": statistics.median(vs),
-                    "max": vs[-1],
-                    "min": vs[0],
-                    "p25": vs[int(n * 0.25)],
-                    "p75": vs[int(n * 0.75)],
-                })
-            return pd.DataFrame(
-                rows, columns=["group", "n", "average", "median", "max",
-                               "min", "p25", "p75"],
-            )
+    # one bounded collect decides the route and, below the cap, is the
+    # data: never more than driver_cap + 1 rows reach the driver
+    local = d0.limit(driver_cap + 1).collect() if driver_cap else []
+    if driver_cap and len(local) <= driver_cap:
+        by_group: dict = {}
+        for r in local:
+            by_group.setdefault(r["g"], []).append(float(r["v"]))
+        rows = []
+        for g in sorted(by_group):
+            vs = sorted(by_group[g])
+            n = len(vs)
+            if n < min_n:
+                continue
+            rows.append({
+                "group": g,
+                "n": n,
+                "average": statistics.mean(vs),
+                "median": statistics.median(vs),
+                "max": vs[-1],
+                "min": vs[0],
+                "p25": vs[int(n * 0.25)],
+                "p75": vs[int(n * 0.75)],
+            })
+        return pd.DataFrame(
+            rows, columns=["group", "n", "average", "median", "max",
+                           "min", "p25", "p75"],
+        )
     d = (
         d0
         .repartitionByRange(F.col("g"), F.col("v"))

@@ -250,21 +250,77 @@ def _fallback_str(s: str, field: str):
     return F.col(f"{s}.{field}")
 
 
+@functools.lru_cache(maxsize=1)
+def _staged_columns() -> tuple:
+    """(name, Column) pairs that build_observations adds to the wide
+    frame in one select ahead of the explode: the ShortTermDebt and COGS
+    fallback picks, each growth decision tree (`_g_<metric>`) and the
+    derived intermediates read by several emission entries. Read by
+    name, each is computed once per row and appears once in the plan;
+    the emission struct reads a growth tree ~12 times, and the driver
+    analyzes and optimizes every copy on every build. CollapseProject
+    does not inline a non-cheap expression that is read more than once,
+    so the projection stays in the plan. Memoized like
+    _emission_entries: pure expression construction."""
+    def or0(present, x):
+        return F.when(present & x.isNotNull(), x).otherwise(F.lit(0.0))
+
+    # ShortTermDebt = DebtCurrent else ShortTermDebt (:1968-1971), a
+    # struct coalesce; td/invcap below inline it (one select)
+    stx = F.coalesce(F.col("b_DebtCurrent"), F.col("b_ShortTermDebt"))
+    # COGS with its Revenue-GrossProfit fallback (:1985-2002), which
+    # feeds derived metrics too (select_cogs, :2583)
+    rev, gp = F.col("b_Revenue"), F.col("b_GrossProfit")
+    cogs_fb = F.struct(
+        F.lit("derived").alias("source_type"),
+        F.lit("derived:COGS").alias("qname"),
+        (rev["value"] - gp["value"]).alias("value"),
+        rev["unit"].alias("unit"),
+        rev["end"].alias("end"),
+        rev["form"].alias("form"),
+        rev["accn"].alias("accn"),
+        F.lit(0.60).alias("confidence"),
+    )
+    cogx = F.coalesce(
+        F.col("b_CostOfGoodsSold"),
+        F.when(rev.isNotNull() & gp.isNotNull(), cogs_fb),
+    )
+    lt, st_v = "b_LongTermDebt", stx["value"]
+    oi, pretax = "b_OperatingIncome", "b_PreTaxIncome"
+    # TotalDebt (derive_total_debt, select_xbrl_tags.py:2015-2027)
+    td = (
+        F.when(_ok(lt) & stx.isNotNull(), _v(lt) + st_v)
+        .when(_ok(lt), _v(lt))
+        .when(stx.isNotNull(), st_v)
+    )
+    ebit = F.when(_ok(oi), _v(oi)).otherwise(
+        _v("b_NetIncome") + _v("b_DepAmort"))
+    # ROIC family (select_xbrl_tags.py:2622-2649)
+    tr = F.when(_nz(_v(pretax)), _v("b_IncomeTaxExpense") / _v(pretax))
+    tot_debt = or0(_ok(lt), _v(lt)) + or0(stx.isNotNull(), st_v)
+    invcap = (
+        tot_debt + or0(_ok("b_Equity"), _v("b_Equity"))
+        - or0(_ok("b_CashAndCashEquivalents"),
+              _v("b_CashAndCashEquivalents"))
+    )
+    staged = [("stx", stx), ("cogx", cogx)]
+    staged += [(f"_g_{gm}", _growth_struct(gm)) for gm in GROWTH_SPEC]
+    staged += [("_td", td), ("_ebit", ebit), ("_tr", tr),
+               ("_nopat", _v(oi) * (1.0 - tr)), ("_invcap", invcap)]
+    return tuple(staged)
+
+
 def _other_derived_rows() -> list[dict]:
     """compute_other_derived (select_xbrl_tags.py:2504-2657) as a list
     of declarative row specs: {metric, cond, value, unit, end, form,
-    accn, computed_from, confidence, period_type}."""
+    accn, computed_from, confidence, period_type}. Reads the staged
+    intermediates (_td, _ebit, _tr, _nopat, _invcap) by name."""
     rev, ni, oi, gp = "b_Revenue", "b_NetIncome", "b_OperatingIncome", "b_GrossProfit"
     cfo, capex, dpa, iexp = "b_CFO", "b_CapEx", "b_DepAmort", "b_InterestExpense"
     eq, eq1, assets, assets1 = "b_Equity", "p_Equity", "b_Assets", "p_Assets"
     ca, cl, inv, inv1 = "b_CurrentAssets", "b_CurrentLiabilities", "b_Inventories", "p_Inventories"
     ar, ar1, cogs = "b_AccountsReceivable", "p_AccountsReceivable", "cogx"
-    pretax, taxexp, lt = "b_PreTaxIncome", "b_IncomeTaxExpense", "b_LongTermDebt"
-    cash = "b_CashAndCashEquivalents"
-
-    # ShortTermDebt selection = DebtCurrent else ShortTermDebt
-    # (select_xbrl_tags.py:1968-1971); struct coalesce:
-    st = "stx"  # virtual column added by caller (coalesce struct)
+    pretax, taxexp = "b_PreTaxIncome", "b_IncomeTaxExpense"
 
     rows: list[dict] = []
 
@@ -298,17 +354,11 @@ def _other_derived_rows() -> list[dict]:
         ebitda, F.col(f"{oi}.unit"), oi, cf="OperatingIncome;DepAmort", conf=0.88)
     add("EBITDAMargin", _ok(oi) & _ok(dpa) & _ok(rev) & _nz(_v(rev)),
         ebitda / _v(rev), lit_ratio, rev, cf="EBITDA;Revenue", conf=0.86)
-    ebit = F.when(_ok(oi), _v(oi)).otherwise(_v(ni) + _v(dpa))
     add("InterestCoverage",
         (_ok(oi) | (_ok(ni) & _ok(dpa))) & _ok(iexp) & _nz(_v(iexp)),
-        ebit / _v(iexp), F.lit("x"), iexp,
+        F.col("_ebit") / _v(iexp), F.lit("x"), iexp,
         cf="OperatingIncome_or_NIplusDA;InterestExpense", conf=0.86)
-    # TotalDebt (derive_total_debt, select_xbrl_tags.py:2015-2027)
-    td_val = (
-        F.when(_ok(lt) & _ok(st), _v(lt) + _v(st))
-        .when(_ok(lt), _v(lt))
-        .when(_ok(st), _v(st))
-    )
+    td_val = F.col("_td")
     add("DebtToEquity", td_val.isNotNull() & _ok(eq) & _nz(_v(eq)),
         td_val / _v(eq), lit_ratio, eq, cf="TotalDebt;Equity", conf=0.86)
     e = F.lit("")
@@ -340,20 +390,10 @@ def _other_derived_rows() -> list[dict]:
         _v(eq) / _v(assets), lit_ratio, assets,
         cf="Equity;Assets", conf=0.84, period="instant")
     # ROIC family (select_xbrl_tags.py:2622-2649)
-    tr = F.when(_nz(_v(pretax)), _v(taxexp) / _v(pretax))
+    tr, nopat, invcap = F.col("_tr"), F.col("_nopat"), F.col("_invcap")
     roic_base = (
         _ok(pretax) & _ok(taxexp) & _ok(oi)
         & tr.isNotNull() & (tr >= 0.0) & (tr <= 1.0) & _v(oi).isNotNull()
-    )
-    nopat = _v(oi) * (1.0 - tr)
-    tot_debt = (
-        F.when(_ok(lt) & _v(lt).isNotNull(), _v(lt)).otherwise(F.lit(0.0))
-        + F.when(_ok(st) & _v(st).isNotNull(), _v(st)).otherwise(F.lit(0.0))
-    )
-    invcap = (
-        tot_debt
-        + F.when(_ok(eq) & _v(eq).isNotNull(), _v(eq)).otherwise(F.lit(0.0))
-        - F.when(_ok(cash) & _v(cash).isNotNull(), _v(cash)).otherwise(F.lit(0.0))
     )
     add("ROIC", roic_base & _nz(invcap), nopat / invcap, lit_ratio, oi,
         cf="OperatingIncome;IncomeTaxExpense;PreTaxIncome;Debt;Equity;Cash",
@@ -404,15 +444,16 @@ def metric_gates(
 def _emission_entries(metrics: tuple, include_derived: bool,
                       skip_derived: bool) -> tuple:
     """The per-metric emission struct expressions (null when the row
-    is absent) as an immutable tuple of Columns. MEMOIZED: this is
-    pure expression construction over fixed column names — no data, no
-    session state — and building it costs ~5s of py4j round trips at
-    ~3,000 Column ops, paid repeatedly by every build_observations
-    call in a process (bench alone calls it four times: kg panel, 10x
-    panel, incremental cold + patch). Column objects are immutable
-    expression trees wrapping JVM-side Expression objects on the
-    process-wide gateway, so reuse across DataFrames AND across
-    SparkSessions in one process is safe."""
+    is absent) as an immutable tuple of Columns over the wide frame
+    plus the _staged_columns. MEMOIZED: this is pure expression
+    construction over fixed column names — no data, no session state —
+    and building the 48 entries plus _staged_columns measured 1.1–2.0 s
+    warm and 2.1–3.3 s cold (4-core box) in py4j round trips, paid by
+    every build_observations call in a process (a run_incremental cold
+    build and each patch, the CQ catalog build, the bench). Column
+    objects are immutable expression trees wrapping JVM-side Expression
+    objects on the process-wide gateway, so reuse across DataFrames AND
+    across SparkSessions in one process is safe."""
     gates = metric_gates(
         metrics,
         include_derived_flag=include_derived,
@@ -475,7 +516,7 @@ def _emission_entries(metrics: tuple, include_derived: bool,
         for gm in GROWTH_SPEC:
             if not gates["derived_on"](gm):
                 continue
-            g = _growth_struct(gm)
+            g = F.col(f"_g_{gm}")
             period = "duration" if gm != "AssetGrowthRate" else "instant"
             obs(gm, g.isNotNull(), g["value"], g["unit"], period, g["end"],
                 g["form"], g["accn"], g["source_type"], g["selected_tag"],
@@ -506,37 +547,16 @@ def build_observations(
     the reference CLI's gating."""
     wide = build_wide(facts, companies, fy, tol_days, prefer_unit)
 
-    # Every chained DataFrame op below re-runs Catalyst ANALYSIS over
-    # the full selection tree (classic-mode Datasets analyze eagerly),
-    # so the post-wide chain is kept to as few ops as possible —
-    # measured ~0.1s of driver time per op at the 240-company panel
-    # (guide §7.3: very large plans make construction a real cost).
-    # ShortTermDebt = DebtCurrent else ShortTermDebt (:1968-1971);
-    # COGS with its Revenue-GrossProfit fallback (:1985-2002) — the
-    # fallback feeds derived metrics too (select_cogs in
-    # compute_other_derived, :2583). Both folded into ONE select.
-    rev_s, gp_s = F.col("b_Revenue"), F.col("b_GrossProfit")
-    cogs_fb = F.struct(
-        F.lit("derived").alias("source_type"),
-        F.lit("derived:COGS").alias("qname"),
-        (rev_s["value"] - gp_s["value"]).alias("value"),
-        rev_s["unit"].alias("unit"),
-        rev_s["end"].alias("end"),
-        rev_s["form"].alias("form"),
-        rev_s["accn"].alias("accn"),
-        F.lit(0.60).alias("confidence"),
-    )
-    assert not {"stx", "cogx"} & set(wide.columns), "reserved wide columns"
-    wide = wide.select(
-        "*",
-        F.coalesce(
-            F.col("b_DebtCurrent"), F.col("b_ShortTermDebt")
-        ).alias("stx"),
-        F.coalesce(
-            F.col("b_CostOfGoodsSold"),
-            F.when(rev_s.isNotNull() & gp_s.isNotNull(), cogs_fb),
-        ).alias("cogx"),
-    )
+    # Each chained DataFrame op below is analyzed eagerly (classic-mode
+    # Datasets), so the post-wide chain is kept to one select, one
+    # explode and the meta join. Their driver cost grows with the size
+    # of their own expressions, not with the selection tree under them,
+    # so every intermediate that several emission entries read is
+    # staged once in this select (_staged_columns).
+    staged = _staged_columns()
+    assert not {n for n, _ in staged} & set(wide.columns), (
+        "reserved wide columns")
+    wide = wide.select("*", *[c.alias(n) for n, c in staged])
     entries = list(_emission_entries(
         tuple(metrics), bool(include_derived), bool(skip_derived)))
 

@@ -215,3 +215,19 @@ def test_driver_cap_route_matches_distributed(spark):
     fast = exact_group_stats(df, "k", "v", min_n=2)
     dist = exact_group_stats(df, "k", "v", min_n=2, driver_cap=0)
     assert fast.to_dict("records") == dist.to_dict("records")
+
+
+def test_driver_cap_boundary(spark):
+    """The driver route's one bounded collect: exactly driver_cap rows
+    stay on the driver route, one more goes distributed, and both equal
+    the forced distributed kernel."""
+    from edgar_finance_ontology_spark.operators.exact_stats import (
+        exact_group_stats,
+    )
+
+    rows = [(f"g{i % 3}", i * 0.37 - 11.0) for i in range(200)]
+    df = spark.createDataFrame(rows, "k string, v double")
+    dist = exact_group_stats(df, "k", "v", min_n=2, driver_cap=0)
+    for cap in (len(rows), len(rows) - 1):
+        got = exact_group_stats(df, "k", "v", min_n=2, driver_cap=cap)
+        assert got.to_dict("records") == dist.to_dict("records"), cap
