@@ -19,6 +19,14 @@ Modes (first CLI arg):
                         construct / optimize / execute seconds, codegen
                         compiles, emission expression chars and output
                         digests per round.
+  pytasks [seed]      — one session shaped like perfbench's, with a local
+                        event log: a cold and a warm kg build, then a
+                        cold store and one late-page patch, on the
+                        12-company perfbench panel (default seed 1).
+                        One JSON line per call: tasks in Python stages
+                        (ArrowEvalPython / MapInPandas / BatchEvalPython
+                        scopes), how many took >= 60 ms and their slot
+                        seconds, and the call's job count.
 """
 
 from __future__ import annotations
@@ -405,6 +413,108 @@ def run_obsplan(seed: int = 1):
     spark.stop()
 
 
+# RDD scope names of the physical operators that run Python workers
+PYTHON_SCOPES = ("ArrowEvalPython", "MapInPandas", "BatchEvalPython")
+SLOW_TASK_MS = 60
+
+
+def _python_task_counts(event_log: str, windows: dict) -> dict:
+    """Per named [start, end] epoch-ms window: the jobs submitted in it,
+    and the tasks of their stages that ran a Python scope."""
+    import glob
+    import json
+
+    job_stages, py_stages, tasks = {}, set(), []
+    for path in sorted(glob.glob(os.path.join(event_log, "**", "*"),
+                                 recursive=True)):
+        if not os.path.isfile(path):
+            continue
+        with open(path, encoding="utf-8") as f:
+            for line in f:
+                ev = json.loads(line)
+                kind = ev.get("Event")
+                if kind == "SparkListenerJobStart":
+                    job_stages[ev["Job ID"]] = (ev["Submission Time"],
+                                                ev["Stage IDs"])
+                elif kind == "SparkListenerStageSubmitted":
+                    info = ev["Stage Info"]
+                    scopes = " ".join(r.get("Scope", "")
+                                      for r in info["RDD Info"])
+                    if any(f'"{n}"' in scopes for n in PYTHON_SCOPES):
+                        py_stages.add(info["Stage ID"])
+                elif kind == "SparkListenerTaskEnd":
+                    ti = ev["Task Info"]
+                    tasks.append((ev["Stage ID"],
+                                  ti["Finish Time"] - ti["Launch Time"]))
+    out = {}
+    for name, (t0, t1) in windows.items():
+        jobs = [j for j, (ts, _) in job_stages.items() if t0 <= ts <= t1]
+        stages = {s for j in jobs for s in job_stages[j][1]} & py_stages
+        ms = [d for sid, d in tasks if sid in stages]
+        slow = [d for d in ms if d >= SLOW_TASK_MS]
+        out[name] = {"python_tasks": len(ms), "slow_tasks": len(slow),
+                     "slow_slot_s": round(sum(slow) / 1000, 3),
+                     "jobs": len(jobs)}
+    return out
+
+
+def run_pytasks(seed: int = 1):
+    """Where the Python task launches of a build and a patch go."""
+    import json
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from edgar_finance_ontology_spark.plans.incremental import (
+        run_incremental,
+    )
+    from perfbench import inputs
+    from perfbench.run import close_session, import_package, open_session
+    from perfbench.trace import Tracer
+    from perfbench.workloads import build_graph
+
+    import_package()
+    with tempfile.TemporaryDirectory() as work:
+        event_log = os.path.join(work, "events")
+        os.makedirs(event_log)
+        pages_path = f"{work}/pages"
+        inputs.write_pages(inputs.page_rows(12, seed), pages_path)
+        windows = {}
+
+        def call(name, fn):
+            t0 = time.time() * 1000
+            value = fn()
+            windows[name] = (t0, time.time() * 1000)
+            return value
+
+        # the event log is complete only once the session has stopped
+        spark = open_session(work, event_log)
+        try:
+            tracer = Tracer(spark, enabled=False)
+            for name in ("build_cold", "build_warm"):
+                call(name, lambda: build_graph(spark, tracer, pages_path,
+                                               f"{work}/kg"))
+            cold = call("store_cold", lambda: run_incremental(
+                spark, spark.read.parquet(pages_path), inputs.FY,
+                f"{work}/store"))
+            revenue = min(
+                cold["observations"].where(
+                    (F.col("metric") == "Revenue") & ~F.col("is_derived"))
+                .collect(), key=lambda r: r["cik"])
+            inputs.write_pages([inputs.late_page(revenue, 0)], pages_path,
+                               prefix="late-0", n_files=1)
+            patch = call("patch", lambda: run_incremental(
+                spark, spark.read.parquet(pages_path), inputs.FY,
+                f"{work}/store"))
+        finally:
+            close_session(spark)
+        if patch["metrics"]["n_dirty"] != 1:
+            raise SystemExit(f"late page patched {patch['metrics']}")
+        for name, counts in _python_task_counts(event_log, windows).items():
+            print(json.dumps({"call": name, "seed": seed, **counts}),
+                  flush=True)
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     args = sys.argv[2:]
@@ -428,6 +538,8 @@ if __name__ == "__main__":
         run_kg_deep()
     elif mode == "obsplan":
         run_obsplan(int(args[0]) if args else 1)
+    elif mode == "pytasks":
+        run_pytasks(int(args[0]) if args else 1)
     elif mode == "oracle":
         from edgar_finance_ontology_spark.queries import QUERIES
 

@@ -223,14 +223,18 @@ def _obs_exprs():
     from ..functions.dates import parse_date_col
     from ..functions.iri import py_round6_col
 
-    v6 = py_round6_col(F.col("value"))
+    # the guard tests the raw value natively: the %.6f round trip maps
+    # null/NaN to null and every other double to a non-null one, so it
+    # keeps the same rows as a guard on the rounded value, and the
+    # computedFromMetric branch, which filters on it, runs no UDF
+    v = F.col("value")
     keep = (
         (F.col("cik") != "") & (F.col("metric") != "")
         & F.col("fy").isNotNull()
         & F.col("period_type").isin("duration", "instant")
-        & v6.isNotNull()
+        & v.isNotNull() & ~F.isnan(v)
     )
-    vrepr = py_float_repr_col(v6)
+    vrepr = py_float_repr_col(py_round6_col(v))
     end_d = parse_date_col(F.col("end"))
     end_nonempty = F.col("end").isNotNull() & (F.col("end") != "")
     quarter = F.when(

@@ -1,11 +1,20 @@
 """IRI / Turtle-literal helpers.
 
 ttl_escape / iri_safe / parse_computed_from are native column
-expressions (regexp_replace / split / transform). iri_camel_case and
-py_float_repr need Python-exact semantics (str.capitalize lowercases
-word tails — "IBM"->"Ibm" — and repr(float) is shortest-roundtrip), so
-they are Arrow-batched pandas UDFs used only in the (tiny) entity-
-dimension and final-emission stages, never on the big fact path.
+expressions (regexp_replace / split / transform). iri_camel_case,
+py_float_repr, py_fixed_format and py_round6 need Python-exact semantics
+(str.capitalize lowercases word tails — "IBM"->"Ibm" — repr(float) is
+shortest-roundtrip, and %.6f rounds the exact binary expansion), so they
+are Arrow-batched pandas UDFs used only in the (tiny) entity-dimension,
+aggregate and final-emission stages, never on the big fact path.
+
+Each Python task has a fixed start cost (~0.1-0.4 s per task at small
+scale, against ~40 ms for a JVM-only task of the same stage; PLANS.md
+"Python stages cost their task count"). Callers feed these UDFs from
+few-partition frames, run each once per row set rather than once per
+consumer, and keep them out of filters a native test can decide: a
+null/NaN guard on the raw value keeps the same rows as a guard on
+py_round6's output.
 
 Reference: _ttl_escape select_xbrl_tags.py:41-44, _iri_safe :46-48,
 _iri_camel_case :50-71, _parse_computed_from :73-94, float emission

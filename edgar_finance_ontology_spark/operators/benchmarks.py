@@ -117,7 +117,10 @@ def compute_benchmarks(
     from .exact_stats import exact_group_stats
 
     spark = observations.sparkSession
-    rows = _key_metric_values(observations)
+    # every consumer below (routing probe, industry lists, all-market
+    # exact stats, sector lookup) reads the rounded rows: materialize
+    # them once so the rounding UDF runs once per call, not per action
+    rows = _key_metric_values(observations).localCheckpoint(eager=True)
 
     # deterministic industry -> sector (reference intent; drift note)
     ind_sector_rows = (
@@ -207,4 +210,7 @@ def compute_benchmarks(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out
+    # bounded (industries x KEY metrics): one partition, so the float-
+    # repr UDF of benchmark_triples starts one Python task, not one per
+    # union part
+    return out.coalesce(1)

@@ -6,19 +6,54 @@ Wall clocks on a shared box are noise; job counts are not. A change
 that adds a stray action or an unfused selection pass shows up here as
 extra jobs. The budget is the measured count (14 jobs on the 12-company
 panel, local[4], 4 shuffle partitions) plus 2 for AQE, which can plan
-one job more or less between builds.
+one job more or less between builds. The same rule sets the budget of
+the aggregates (benchmarks + rankings) checkpoints.
+
+Python UDF stages are guarded by their `ArrowEvalPython` node count:
+at small scale each Python task pays a fixed start of a tenth of a
+second or more (PLANS.md, "Python stages cost their task count"), so a
+UDF that runs once more per consumer costs wall time, not throughput.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+import pytest
+
 OBS_JOBS_MEASURED = 14
 OBS_JOB_BUDGET = OBS_JOBS_MEASURED + 2
+# concurrent compute_benchmarks + compute_rankings checkpoints on the
+# same panel; 24 before rankings became one pass and benchmarks read
+# one checkpoint of its rounded rows
+AGG_JOBS_MEASURED = 13
+AGG_JOB_BUDGET = AGG_JOBS_MEASURED + 2
+# (rows, xxhash64 sum) of test_observation_triples_udf_nodes' triples,
+# taken with the rounded-value keep guard
+OBS_TRIPLES_DIGEST = (97, "29182526452926444697")
 
 
-def test_observation_checkpoint_job_budget(spark, tmp_path):
-    from edgar_finance_ontology_spark.operators.observations import (
-        build_observations,
-    )
+def _jobs_of(sc, group: str, *fns):
+    """Run ``fns`` on pool threads under job group ``group``; return
+    their results and the group's job ids."""
+    def in_group(fn):
+        sc.setJobGroup(group, group)
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futs = [pool.submit(in_group, fn) for fn in fns]
+        out = [f.result() for f in futs]
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.fixture(scope="module")
+def panel_inputs(spark, tmp_path_factory):
+    """The 12-company synthetic panel's facts and companies,
+    checkpointed as run_pipeline hands them to the selection."""
     from edgar_finance_ontology_spark.sources.facts import (
         build_companies, explode_facts, read_companyfacts_json,
         read_submissions_json,
@@ -27,26 +62,51 @@ def test_observation_checkpoint_job_budget(spark, tmp_path):
         write_reference_inputs,
     )
 
-    paths = write_reference_inputs(tmp_path)
-    cf = read_companyfacts_json(spark, str(tmp_path / "facts" / "*.json"))
+    d = tmp_path_factory.mktemp("job_budget_panel")
+    paths = write_reference_inputs(d)
+    cf = read_companyfacts_json(spark, str(d / "facts" / "*.json"))
     subs = read_submissions_json(spark, paths["subs_cache_dir"] + "/*.json")
-    # checkpointed inputs, as run_pipeline hands them to the selection
     facts = explode_facts(cf).localCheckpoint(eager=True)
     companies = build_companies(cf, subs).localCheckpoint(eager=True)
+    return facts, companies
 
-    sc = spark.sparkContext
-    group = "job-budget:observations"
-    sc.setJobGroup(group, "build_observations checkpoint")
-    try:
-        obs = build_observations(facts, companies, 2024).localCheckpoint(
-            eager=True)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+
+def test_observation_checkpoint_job_budget(spark, panel_inputs):
+    from edgar_finance_ontology_spark.operators.observations import (
+        build_observations,
+    )
+
+    facts, companies = panel_inputs
+    (obs,), jobs = _jobs_of(
+        spark.sparkContext, "job-budget:observations",
+        lambda: build_observations(facts, companies, 2024).localCheckpoint(
+            eager=True))
 
     assert obs.count() == 542
     assert 0 < len(jobs) <= OBS_JOB_BUDGET, sorted(jobs)
+
+
+def test_aggregates_job_budget(spark, panel_inputs):
+    from edgar_finance_ontology_spark.operators.benchmarks import (
+        compute_benchmarks,
+    )
+    from edgar_finance_ontology_spark.operators.observations import (
+        build_observations,
+    )
+    from edgar_finance_ontology_spark.operators.rankings import (
+        compute_rankings,
+    )
+
+    facts, companies = panel_inputs
+    obs = build_observations(facts, companies, 2024).localCheckpoint(
+        eager=True)
+    (bench, rank), jobs = _jobs_of(
+        spark.sparkContext, "job-budget:aggregates",
+        lambda: compute_benchmarks(obs, 2024).localCheckpoint(eager=True),
+        lambda: compute_rankings(obs, 2024).localCheckpoint(eager=True))
+
+    assert bench.count() > 0 and rank.count() > 0
+    assert 0 < len(jobs) <= AGG_JOB_BUDGET, sorted(jobs)
 
 
 # Summed expression text of the emission array with every metric on.
@@ -86,3 +146,63 @@ def test_key_metric_values_rounds_once(spark):
     assert plan.count("ArrowEvalPython") == 1, plan
     got = sorted((r["cik"], r["value"]) for r in rows.collect())
     assert got == [(0, 1.234568), (5, -0.0), (6, 1e300), (7, 0.0)]
+
+
+def test_observation_triples_udf_nodes(spark):
+    """The keep guard of the observation family tests the raw value
+    natively, so only the value literal runs Python: the round trip and
+    repr chain into one ArrowEvalPython node, and the computedFromMetric
+    branch runs none. With the shared camel map, as build_triples and
+    the patcher call it, the rounded-value guard measured 3 nodes. Rows
+    are pinned for null, NaN, ±inf, tiny and huge values and a derived
+    row with computed_from."""
+    from pyspark.sql import functions as F
+
+    from edgar_finance_ontology_spark.emit.triples import (
+        _camel_value_map, observation_triples,
+    )
+    from edgar_finance_ontology_spark.sources.schemas import (
+        OBSERVATIONS_SCHEMA,
+    )
+
+    vals = [1.23456789, None, float("nan"), float("inf"), float("-inf"),
+            -0.0000004, 1e300, 2.5e-7, 5e-324]
+
+    def row(i, v, derived=False, computed_from=""):
+        return (str(i), "S", "N", "Sec", "Ind", "", "", "1231", 2024,
+                "NetProfitMargin" if derived else "Revenue", derived, v,
+                "USD", "duration", "2024-12-31", "10-K", "a",
+                "derived" if derived else "xbrl",
+                "" if derived else "Revenues", "", computed_from, 1.0,
+                "", "")
+
+    obs = spark.createDataFrame(
+        [row(i, v) for i, v in enumerate(vals)]
+        + [row(20, 0.125, True, "NetIncome(cur),Revenue(cur)"),
+           row(21, None, True, "NetIncome(cur),Revenue(cur)")],
+        OBSERVATIONS_SCHEMA)
+    trip = observation_triples(
+        obs, camel_map=_camel_value_map([(obs, "unit")]))
+    got = trip.collect()
+    plan = trip._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+    values = sorted(
+        (r["subj"][9:19], r["obj"]) for r in got
+        if r["pred"] == "efin:hasNumericValue")
+    assert values == [
+        ("0000000000", "1.234568"), ("0000000003", "inf"),
+        ("0000000004", "-inf"), ("0000000005", "-0.0"),
+        ("0000000006", "1e+300"), ("0000000007", "0.0"),
+        ("0000000008", "0.0"), ("0000000020", "0.125"),
+    ]
+    computed = sorted(
+        (r["subj"][9:19], r["obj"]) for r in got
+        if r["pred"] == "efin:computedFromMetric")
+    assert computed == [("0000000020", "efin:NetIncome"),
+                        ("0000000020", "efin:Revenue")]
+    digest = trip.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*trip.columns).cast("decimal(38,0)")).alias("h"),
+    ).first()
+    assert (digest["n"], str(digest["h"])) == OBS_TRIPLES_DIGEST
