@@ -4,8 +4,8 @@ semantic store (TRIPLES_SCHEMA), partition-friendly at 10^12 scale.
 Mirrors emit_efin_ttl's block families (select_xbrl_tags.py:96-612) as
 DataFrame transforms. The only Python in the big-table path is the
 Arrow-batched repr(float) UDF for xsd:double lexical forms (byte parity
-with Python float repr); every IRI camel-casing runs on tiny distinct
-dimension frames and is broadcast back.
+with Python float repr); IRI camel-casing is a native column expression
+(functions/iri.iri_camel_case_col) inlined where each IRI is built.
 
 Literal encoding: obj holds the escaped lexical form; obj_dtype is the
 xsd type (null = plain quoted string; xsd:integer/xsd:boolean render
@@ -53,86 +53,20 @@ def _emit(df: DataFrame, subj, entries: list) -> DataFrame:
     )
 
 
-def _camel_dim(df: DataFrame, col: str, key: str = "_dim_key",
-               camel_map=None) -> DataFrame:
-    """distinct values of `col` + their CamelCase IRIs (tiny frame).
-    The join key column gets a collision-free name (`key`). With a
-    `camel_map` literal (see _camel_value_map) the camel casing is a
-    map lookup instead of an ArrowEvalPython stage — same values."""
-    d = (
-        df.select(F.col(col).alias(key))
-        .where((F.col(key) != "") & F.col(key).isNotNull())
+def _camel_dim(df: DataFrame, col: str) -> DataFrame:
+    """distinct non-empty values of `col` (as `_dim_key`, a
+    collision-free join key) + their CamelCase IRI part (tiny frame)."""
+    return (
+        df.select(F.col(col).alias("_dim_key"))
+        .where((F.col("_dim_key") != "") & F.col("_dim_key").isNotNull())
         .distinct()
+        .withColumn("camel", iri_camel_case_col(F.col("_dim_key")))
     )
-    if camel_map is not None:
-        return d.withColumn("camel", F.element_at(camel_map, F.col(key)))
-    return d.withColumn("camel", iri_camel_case_col(F.col(key)))
 
 
-# dim-value count above which the literal-map fast path is abandoned
-# for the original broadcast-dim-join path. The camelable dims are
-# business dimensions (sectors / industries / units / benchmark
-# metrics) — bounded by construction; the cap turns "bounded by
-# construction" into "bounded by contract" the same way
-# connected_components' driver_cap does.
-CAMEL_MAP_CAP = 50_000
-
-
-def _camel_value_map(sources: list[tuple[DataFrame, str]],
-                     cap: int = CAMEL_MAP_CAP):
-    """ONE job collecting every distinct camelable dim value across
-    `sources`, returned as a literal value->CamelCase map Column
-    (iri_camel_case is the same Python function the pandas-UDF path
-    applies, so lexical forms are identical). Returns None when the
-    value count exceeds `cap` — callers fall back to the per-family
-    broadcast-dim-join path.
-
-    Why (guide §2.4 remove shuffles): build_triples ran ~12 _camel_dim
-    legs, each a distinct Exchange + an ArrowEvalPython + a broadcast
-    exchange + a join — all to attach a pure function of a bounded
-    value set. One bounded collect + a literal map turns every leg
-    into a column expression."""
-    from ..functions.iri import iri_camel_case
-
-    parts = None
-    for df, col in sources:
-        p = df.select(F.col(col).cast("string").alias("v")).where(
-            F.col("v").isNotNull() & (F.col("v") != ""))
-        parts = p if parts is None else parts.unionByName(p)
-    rows = parts.distinct().limit(cap + 1).collect()
-    if len(rows) > cap:
-        return None
-    vals = sorted(r["v"] for r in rows)
-    ks = F.array(*[F.lit(v) for v in vals]).cast("array<string>")
-    vs = F.array(*[F.lit(iri_camel_case(v)) for v in vals]) \
-        .cast("array<string>")
-    return F.map_from_arrays(ks, vs)
-
-
-def company_triples(companies: DataFrame, camel_map=None) -> DataFrame:
-    if camel_map is not None:
-        c = companies.withColumn(
-            "sector_camel", F.element_at(camel_map, F.col("sector"))
-        ).withColumn(
-            "industry_camel", F.element_at(camel_map, F.col("industry"))
-        )
-    else:
-        sec_dim = _camel_dim(companies, "sector")
-        ind_dim = _camel_dim(companies, "industry")
-        c = (
-            companies.join(
-                F.broadcast(
-                    sec_dim.withColumnRenamed("camel", "sector_camel")),
-                companies["sector"] == sec_dim["_dim_key"], "left",
-            ).drop("_dim_key")
-            .join(
-                F.broadcast(
-                    ind_dim.withColumnRenamed("camel", "industry_camel")),
-                companies["industry"] == ind_dim["_dim_key"], "left",
-            ).drop("_dim_key")
-        )
+def company_triples(companies: DataFrame) -> DataFrame:
     subj, entries = _company_exprs()
-    return _emit(c, subj, list(entries))
+    return _emit(companies, subj, list(entries))
 
 
 @functools.lru_cache(maxsize=1)
@@ -154,51 +88,32 @@ def _company_exprs():
         (F.col("sic") != "", _t("efin:hasSIC", ttl_escape_col(F.col("sic")), True)),
         (F.col("sic_description") != "", _t("efin:hasSICDescription", ttl_escape_col(F.col("sic_description")), True)),
         (F.col("fye") != "", _t("efin:hasFiscalYearEnd", ttl_escape_col(F.col("fye")), True)),
-        (F.col("sector") != "", _t("efin:inSector", F.concat(F.lit("efin:Sector"), F.col("sector_camel")))),
-        (F.col("industry") != "", _t("efin:inIndustry", F.concat(F.lit("efin:Industry"), F.col("industry_camel")))),
+        (F.col("sector") != "", _t("efin:inSector", F.concat(F.lit("efin:Sector"), iri_camel_case_col(F.col("sector"))))),
+        (F.col("industry") != "", _t("efin:inIndustry", F.concat(F.lit("efin:Industry"), iri_camel_case_col(F.col("industry"))))),
     )
     return subj, entries
 
 
-def entity_dim_triples(companies: DataFrame, needs_sector_all: bool,
-                       camel_map=None) -> DataFrame:
+def entity_dim_triples(companies: DataFrame) -> DataFrame:
     """Sector / Industry instance + inSectorOf triples
     (select_xbrl_tags.py:211-231)."""
-    spark = companies.sparkSession
-    sec = _camel_dim(companies, "sector", camel_map=camel_map).select(
+    sec = _camel_dim(companies, "sector").select(
         F.concat(F.lit("efin:Sector"), F.col("camel")).alias("subj"),
         F.lit("rdf:type").alias("pred"),
         F.lit("efin:Sector").alias("obj"),
         F.lit(False).alias("obj_is_literal"),
         F.lit(None).cast("string").alias("obj_dtype"),
     )
-    out = sec
-    if needs_sector_all:
-        out = out.unionByName(spark.createDataFrame(
-            [("efin:SectorAll", "rdf:type", "efin:Sector", False, None)],
-            sec.schema,
-        ))
     # industry -> sector of its first (lowest-cik) company with a sector
     ind_sec = (
         companies.where((F.col("industry") != "") & (F.col("sector") != ""))
         .groupBy("industry")
         .agg(F.min_by("sector", "cik").alias("sector"))
     )
-    ind_dim = _camel_dim(companies, "industry", camel_map=camel_map)
+    ind_dim = _camel_dim(companies, "industry")
     ind = ind_dim.join(
         ind_sec, ind_dim["_dim_key"] == ind_sec["industry"], "left"
     )
-    if camel_map is not None:
-        ind = ind.withColumn(
-            "sec_camel", F.element_at(camel_map, F.col("sector")))
-    else:
-        sec_dim = _camel_dim(companies, "sector") \
-            .withColumnRenamed("camel", "sec_camel") \
-            .withColumnRenamed("_dim_key", "_sec_key")
-        ind = ind.join(
-            F.broadcast(sec_dim),
-            F.col("sector") == sec_dim["_sec_key"], "left",
-        )
     ind_type = ind.select(
         F.concat(F.lit("efin:Industry"), F.col("camel")).alias("subj"),
         F.lit("rdf:type").alias("pred"),
@@ -209,11 +124,12 @@ def entity_dim_triples(companies: DataFrame, needs_sector_all: bool,
     ind_sec_t = ind.where(F.col("sector").isNotNull()).select(
         F.concat(F.lit("efin:Industry"), F.col("camel")).alias("subj"),
         F.lit("efin:inSectorOf").alias("pred"),
-        F.concat(F.lit("efin:Sector"), F.col("sec_camel")).alias("obj"),
+        F.concat(F.lit("efin:Sector"),
+                 iri_camel_case_col(F.col("sector"))).alias("obj"),
         F.lit(False).alias("obj_is_literal"),
         F.lit(None).cast("string").alias("obj_dtype"),
     )
-    return out.unionByName(ind_type).unionByName(ind_sec_t)
+    return sec.unionByName(ind_type).unionByName(ind_sec_t)
 
 
 @functools.lru_cache(maxsize=1)
@@ -262,7 +178,7 @@ def _obs_exprs():
         (F.lit(True), _t("efin:hasPeriodType", ttl_escape_col(F.col("period_type")), True)),
         (end_nonempty, _t("efin:hasPeriodEnd", F.concat(ttl_escape_col(F.col("end")), F.lit("T00:00:00")), True, "xsd:dateTime")),
         (F.col("quarter").isNotNull(), _t("efin:hasQuarter", F.col("quarter").cast("string"), True, "xsd:integer")),
-        (F.col("unit") != "", _t("efin:hasUnit", F.concat(F.lit("efin:Unit"), F.col("unit_camel")))),
+        (F.col("unit") != "", _t("efin:hasUnit", F.concat(F.lit("efin:Unit"), iri_camel_case_col(F.col("unit"))))),
         (uu.isin(*CURRENCY_CODES), _t("efin:hasCurrency", F.concat(F.lit("efin:Currency"), uu))),
         (F.lit(True), _t("efin:hasNumericValue", F.col("vrepr"), True, "xsd:double")),
         (F.lit(True), _t("efin:isDerived", F.when(F.col("is_derived"), "true").otherwise("false"), True, "xsd:boolean")),
@@ -272,23 +188,12 @@ def _obs_exprs():
     return keep, vrepr, end_d, quarter, subj, entries
 
 
-def observation_triples(obs: DataFrame, camel_map=None) -> DataFrame:
+def observation_triples(obs: DataFrame) -> DataFrame:
     """Observation family (select_xbrl_tags.py:235-400) over the
     CSV-rounded value view."""
-    if camel_map is not None:
-        o = obs.withColumn(
-            "unit_camel", F.element_at(camel_map, F.col("unit")))
-    else:
-        unit_dim = _camel_dim(obs, "unit") \
-            .withColumnRenamed("camel", "unit_camel")
-        o = obs.join(
-            F.broadcast(unit_dim), obs["unit"] == unit_dim["_dim_key"],
-            "left",
-        ).drop("_dim_key")
-
     keep, vrepr, end_d, quarter, subj, entries = _obs_exprs()
     o = (
-        o.where(keep)
+        obs.where(keep)
         .withColumn("vrepr", vrepr)
         .withColumn("end_d", end_d)
     )
@@ -314,7 +219,7 @@ def observation_triples(obs: DataFrame, camel_map=None) -> DataFrame:
     return base.unionByName(cf)
 
 
-def instance_dim_triples(obs: DataFrame, camel_map=None) -> DataFrame:
+def instance_dim_triples(obs: DataFrame) -> DataFrame:
     """Unit / Currency / XBRLConcept instance blocks
     (select_xbrl_tags.py:402-431)."""
     valid = obs.where(
@@ -322,7 +227,7 @@ def instance_dim_triples(obs: DataFrame, camel_map=None) -> DataFrame:
         & F.col("period_type").isin("duration", "instant")
         & F.col("value").isNotNull()
     )
-    units = _camel_dim(valid, "unit", camel_map=camel_map)
+    units = _camel_dim(valid, "unit")
     unit_t = units.select(
         F.concat(F.lit("efin:Unit"), F.col("camel")).alias("subj"),
         F.lit("rdf:type").alias("pred"), F.lit("efin:Unit").alias("obj"),
@@ -367,31 +272,11 @@ def instance_dim_triples(obs: DataFrame, camel_map=None) -> DataFrame:
 
 def benchmark_triples(
     benchmarks: DataFrame, include_industry_scope: bool = False,
-    camel_map=None,
 ) -> DataFrame:
     """Benchmark family (select_xbrl_tags.py:433-489)."""
     b = benchmarks
     if not include_industry_scope:
         b = b.where(F.col("industry") == "")
-    if camel_map is not None:
-        b = b.withColumn(
-            "ind_camel", F.element_at(camel_map, F.col("industry"))
-        ).withColumn(
-            "met_camel", F.element_at(camel_map, F.col("metric"))
-        )
-    else:
-        ind_dim = _camel_dim(b, "industry") \
-            .withColumnRenamed("camel", "ind_camel")
-        met_dim = _camel_dim(b, "metric") \
-            .withColumnRenamed("camel", "met_camel")
-        b = (
-            b.join(F.broadcast(ind_dim),
-                   b["industry"] == ind_dim["_dim_key"], "left")
-            .drop("_dim_key")
-            .join(F.broadcast(met_dim),
-                  b["metric"] == met_dim["_dim_key"], "left")
-            .drop("_dim_key")
-        )
     subj, repr_cols, entries = _benchmark_exprs()
     for col, expr in repr_cols:
         b = b.withColumn(f"{col}_r", expr)
@@ -403,12 +288,14 @@ def _benchmark_exprs():
     """Pure expression fragments of the benchmark family (see
     _company_exprs for the memoization rationale)."""
     scoped = F.col("industry") != ""
+    ind_camel = iri_camel_case_col(F.col("industry"))
+    met_camel = iri_camel_case_col(F.col("metric"))
     subj = F.when(
         scoped,
-        F.concat(F.lit("efin:IndustryBenchmark"), F.col("ind_camel"),
-                 F.col("met_camel"), F.col("fy").cast("string")),
+        F.concat(F.lit("efin:IndustryBenchmark"), ind_camel, met_camel,
+                 F.col("fy").cast("string")),
     ).otherwise(
-        F.concat(F.lit("efin:AllBenchmark"), F.col("met_camel"),
+        F.concat(F.lit("efin:AllBenchmark"), met_camel,
                  F.col("fy").cast("string"))
     )
     stats = [
@@ -424,7 +311,7 @@ def _benchmark_exprs():
     )
     entries = [
         (F.lit(True), _t("rdf:type", F.when(scoped, "efin:IndustryBenchmark").otherwise("efin:AllBenchmark"))),
-        (scoped, _t("efin:forIndustry", F.concat(F.lit("efin:Industry"), F.col("ind_camel")))),
+        (scoped, _t("efin:forIndustry", F.concat(F.lit("efin:Industry"), ind_camel))),
         (~scoped, _t("efin:forSector", F.lit("efin:SectorAll"))),
         (F.lit(True), _t("efin:forMetric", F.concat(F.lit("efin:"), iri_safe_col(F.col("metric"))))),
         (F.lit(True), _t("efin:forFiscalYear", F.col("fy").cast("string"), True, "xsd:integer")),
@@ -442,7 +329,6 @@ def ranking_triples(
     rankings: DataFrame,
     include_industry_scope: bool = False,
     include_sector_scope: bool = False,
-    camel_map=None,
 ) -> DataFrame:
     """TopRanking family + hasRanking backlinks
     (select_xbrl_tags.py:491-609). Top10 only; industry/sector scopes
@@ -454,33 +340,6 @@ def ranking_triples(
         r = r.where(~scoped_ind | (F.col("metric") == "Composite"))
     if not include_sector_scope:
         r = r.where(~scoped_sec | (F.col("metric") == "Composite"))
-    if camel_map is not None:
-        r = (
-            r.withColumn("ind_camel",
-                         F.element_at(camel_map, F.col("industry")))
-            .withColumn("sec_camel",
-                        F.element_at(camel_map, F.col("sector")))
-            .withColumn("met_camel",
-                        F.element_at(camel_map, F.col("metric")))
-        )
-    else:
-        ind_dim = _camel_dim(r, "industry") \
-            .withColumnRenamed("camel", "ind_camel")
-        sec_dim = _camel_dim(r, "sector") \
-            .withColumnRenamed("camel", "sec_camel")
-        met_dim = _camel_dim(r, "metric") \
-            .withColumnRenamed("camel", "met_camel")
-        r = (
-            r.join(F.broadcast(ind_dim),
-                   r["industry"] == ind_dim["_dim_key"], "left")
-            .drop("_dim_key")
-            .join(F.broadcast(sec_dim),
-                  r["sector"] == sec_dim["_dim_key"], "left")
-            .drop("_dim_key")
-            .join(F.broadcast(met_dim),
-                  r["metric"] == met_dim["_dim_key"], "left")
-            .drop("_dim_key")
-        )
     subj, value_r, score_r, entries = _ranking_exprs()
     r = r.withColumn("value_r", value_r).withColumn("score_r", score_r)
     blocks = _emit(r, subj, list(entries))
@@ -502,15 +361,18 @@ def _ranking_exprs():
     scoped_sec = (F.col("industry") == "") & (F.col("sector") != "")
     cik10 = F.lpad("cik", 10, "0")
     fy_s = F.col("fy").cast("string")
+    ind_camel = iri_camel_case_col(F.col("industry"))
+    sec_camel = iri_camel_case_col(F.col("sector"))
+    met_camel = iri_camel_case_col(F.col("metric"))
     subj = (
         F.when(scoped_ind, F.concat(
-            F.lit("efin:TopRanking"), F.col("ind_camel"), F.col("met_camel"),
+            F.lit("efin:TopRanking"), ind_camel, met_camel,
             F.lit("Top10"), fy_s, cik10))
         .when(scoped_sec, F.concat(
-            F.lit("efin:TopRankingSector"), F.col("sec_camel"), F.col("met_camel"),
+            F.lit("efin:TopRankingSector"), sec_camel, met_camel,
             F.lit("Top10"), fy_s, cik10))
         .otherwise(F.concat(
-            F.lit("efin:TopRankingAll"), F.col("met_camel"),
+            F.lit("efin:TopRankingAll"), met_camel,
             F.lit("Top10"), fy_s, cik10))
     )
     finite = lambda c: c.isNotNull() & ~F.isnan(c) & (c != float("inf")) & (c != float("-inf"))  # noqa: E731
@@ -519,8 +381,8 @@ def _ranking_exprs():
     cls = F.when(scoped_ind, "efin:IndustryTopRanking").otherwise("efin:AllTopRanking")
     entries = (
         (F.lit(True), _t("rdf:type", cls)),
-        (scoped_ind, _t("efin:forIndustry", F.concat(F.lit("efin:Industry"), F.col("ind_camel")))),
-        (scoped_sec, _t("efin:forSector", F.concat(F.lit("efin:Sector"), F.col("sec_camel")))),
+        (scoped_ind, _t("efin:forIndustry", F.concat(F.lit("efin:Industry"), ind_camel))),
+        (scoped_sec, _t("efin:forSector", F.concat(F.lit("efin:Sector"), sec_camel))),
         (~scoped_ind & ~scoped_sec, _t("efin:forSector", F.lit("efin:SectorAll"))),
         (F.lit(True), _t("efin:forMetric", F.concat(F.lit("efin:"), iri_safe_col(F.col("metric"))))),
         (F.lit(True), _t("efin:forFiscalYear", fy_s, True, "xsd:integer")),
@@ -548,46 +410,18 @@ def build_triples(
     construction (one block per key), so no global shuffle-dedup is
     needed; only the bounded dim families get a safety dropDuplicates
     (SectorAll could collide with a literal 'All' sector)."""
-    camel_map = _shared_camel_map(
-        observations, companies, benchmarks, rankings
-    )
     parts = [
-        company_triples(companies, camel_map=camel_map),
+        company_triples(companies),
         global_family_triples(
             observations, companies, benchmarks, rankings,
             include_industry_scope, include_sector_scope,
-            camel_map=camel_map,
         ),
-        observation_triples(observations, camel_map=camel_map),
+        observation_triples(observations),
     ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def _shared_camel_map(observations, companies, benchmarks, rankings):
-    """The one bounded camel map every triple family shares (None over
-    cap -> families fall back to their broadcast-dim joins)."""
-    sources = [(companies, "sector"), (companies, "industry"),
-               (observations, "unit")]
-    if benchmarks is not None:
-        sources += [(benchmarks, "industry"), (benchmarks, "metric")]
-    if rankings is not None:
-        sources += [(rankings, "industry"), (rankings, "sector"),
-                    (rankings, "metric")]
-    return _camel_value_map(sources)
-
-
-def has_all_market(df: DataFrame) -> bool:
-    """True when the frame carries an all-market scope row — one
-    partial-agg job instead of a limit(1).count() probe (the probe
-    replays the frame's full lineage when it isn't cached)."""
-    flag = df.agg(F.max(
-        F.when((F.col("industry") == "") & (F.col("sector") == ""), 1)
-        .otherwise(0)
-    )).first()[0]
-    return flag == 1
 
 
 def global_family_triples(
@@ -597,27 +431,20 @@ def global_family_triples(
     rankings: DataFrame | None = None,
     include_industry_scope: bool = False,
     include_sector_scope: bool = False,
-    camel_map=None,
 ) -> DataFrame:
     """The BOUNDED global families (entity/instance dims + benchmark +
     ranking triples) as one frame — the piece build_triples and the
     incremental triple-store patcher (plans/incremental.py) share, so
     the SectorAll/dim rules live in exactly one place."""
     # The SectorAll row is derived LAZILY inside the plan instead of
-    # via has_all_market() driver probes: the probe was a ~1.4s action
-    # on the build_triples critical path (per family), while a 1-row
-    # flag aggregate unioned into the dim family folds into whatever
-    # action consumes the triples. (The Turtle writer keeps its driver
-    # flag — there it is already folded into the one-job family
-    # summaries.)
-    if camel_map is None:
-        camel_map = _shared_camel_map(
-            observations, companies, benchmarks, rankings)
-    out = entity_dim_triples(
-        companies, False, camel_map=camel_map
-    ).unionByName(
-        instance_dim_triples(observations, camel_map=camel_map)
-    )
+    # via a driver probe of the benchmark and ranking frames for an
+    # all-market row: the probe was a ~1.4s action on the build_triples
+    # critical path (per family), while a 1-row flag aggregate unioned
+    # into the dim family folds into whatever action consumes the
+    # triples. (The Turtle writer keeps its driver flag — there it is
+    # already folded into the one-job family summaries.)
+    out = entity_dim_triples(companies).unionByName(
+        instance_dim_triples(observations))
     flag_parts = [
         fam.select(F.max(
             F.when((F.col("industry") == "") & (F.col("sector") == ""), 1)
@@ -643,9 +470,8 @@ def global_family_triples(
     out = out.dropDuplicates(["subj", "pred", "obj"])
     if benchmarks is not None:
         out = out.unionByName(benchmark_triples(
-            benchmarks, include_industry_scope, camel_map=camel_map))
+            benchmarks, include_industry_scope))
     if rankings is not None:
         out = out.unionByName(ranking_triples(
-            rankings, include_industry_scope, include_sector_scope,
-            camel_map=camel_map))
+            rankings, include_industry_scope, include_sector_scope))
     return out

@@ -212,8 +212,8 @@ def _instance_dim_lines(obs_csv_frame: DataFrame) -> list:
 
 
 def _family_summary(csv_frame: DataFrame):
-    """ONE job per family frame: (n_rows, has_all_market_row).
-    Replaces the per-flag limit(1).count() probes, each of which
+    """ONE job per family frame: (n_rows, all_market), where all_market
+    is 1 when some row has an empty industry and sector. Replaces the per-flag limit(1).count() probes, each of which
     re-derived the full upstream lineage."""
     return csv_frame.agg(
         F.count("*").alias("n"),

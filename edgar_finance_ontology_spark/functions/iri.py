@@ -1,12 +1,15 @@
 """IRI / Turtle-literal helpers.
 
-ttl_escape / iri_safe / parse_computed_from are native column
-expressions (regexp_replace / split / transform). iri_camel_case,
-py_float_repr, py_fixed_format and py_round6 need Python-exact semantics
-(str.capitalize lowercases word tails — "IBM"->"Ibm" — repr(float) is
-shortest-roundtrip, and %.6f rounds the exact binary expansion), so they
-are Arrow-batched pandas UDFs used only in the (tiny) entity-dimension,
-aggregate and final-emission stages, never on the big fact path.
+ttl_escape / iri_safe / iri_camel_case / parse_computed_from are
+native column expressions (regexp_replace / initcap / split /
+transform). iri_camel_case first maps every non-[A-Za-z0-9] character
+to a space, so initcap (lowercase the string, then upper-case each
+letter after a space) reproduces str.capitalize per word — "IBM" ->
+"Ibm" — exactly. py_float_repr, py_fixed_format and py_round6 need
+Python-exact semantics (repr(float) is shortest-roundtrip, and %.6f
+rounds the exact binary expansion), so they are Arrow-batched pandas
+UDFs used only in the aggregate and final-emission stages, never on the
+big fact path.
 
 Each Python task has a fixed start cost (~0.1-0.4 s per task at small
 scale, against ~40 ms for a JVM-only task of the same stage; PLANS.md
@@ -60,9 +63,11 @@ def iri_camel_case(s: str | None) -> str:
     return result
 
 
-@pandas_udf(StringType())
-def iri_camel_case_col(s: pd.Series) -> pd.Series:
-    return s.map(iri_camel_case, na_action=None).fillna("")
+def iri_camel_case_col(c: Column) -> Column:
+    """Native iri_camel_case: non-alnum -> space, initcap, drop the
+    spaces. Null -> ''."""
+    spaced = F.regexp_replace(F.coalesce(c, F.lit("")), r"[^A-Za-z0-9]", " ")
+    return F.regexp_replace(F.initcap(spaced), " ", "")
 
 
 def py_float_repr(v) -> str:

@@ -335,23 +335,14 @@ def run_incremental(
     # recoverable from the triple itself
     subj_cik = F.regexp_extract("subj", r"(?:CIK|obs-)(\d{10})", 1)
     if metrics["n_dirty"]:
-        # one bounded camel map shared by the dirty-slice and global
-        # families (dirty values ⊆ the patched full frames, which the
-        # map is collected from) — emit/triples._camel_value_map
-        from ..emit.triples import _shared_camel_map
-
-        camel_map = _shared_camel_map(
-            observations, companies, benchmarks, rankings)
         # snapshot metadata keys partition values as strings (hive dir
         # names); the dirty-bucket set is <= n_cik_buckets rows, a
         # bounded driver collect
         dirty_bucket_set = {
             str(r["cik_bucket"]) for r in dirty_buckets.collect()
         }
-        percik_dirty = company_triples(
-            companies_d, camel_map=camel_map
-        ).unionByName(
-            observation_triples(obs_dirty, camel_map=camel_map)
+        percik_dirty = company_triples(companies_d).unionByName(
+            observation_triples(obs_dirty)
         ).withColumn("family", F.lit("percik")) \
          .withColumn("cik_bucket", cik_bucket_col(subj_cik, n_cik_buckets))
         if snapshots.table_exists(tri_dir):
@@ -388,7 +379,6 @@ def run_incremental(
             global_family_triples(
                 observations, companies, benchmarks, rankings,
                 include_industry_scope, include_sector_scope,
-                camel_map=camel_map,
             )
             .withColumn("family", F.lit("global"))
             .withColumn("cik_bucket", F.lit(-1).cast("int"))

@@ -2,7 +2,9 @@
 reference's Python semantics."""
 
 import math
+import random
 import re
+import string
 
 from pyspark.sql import functions as F
 
@@ -20,8 +22,20 @@ def _ref_iri_camel_case(s):
     return result
 
 
-def test_iri_camel_case_python_semantics():
-    from edgar_finance_ontology_spark.functions.iri import iri_camel_case
+# ASCII letters, digits, punctuation, tab/newline, plus non-ASCII
+# letters and digits with unusual case mappings: é ß İ ǅ ﬁ 𝔸 Ａ ٣ ı,
+# the Kelvin sign and Σ
+_CAMEL_FUZZ_ALPHABET = (
+    string.ascii_letters + string.digits + string.punctuation + " \t\n"
+    + "\u00e9\u00df\u0130\u01c5\ufb01\U0001d538\uff21\u0663\u0131"
+    + "\u212a\u03a3"
+)
+
+
+def test_iri_camel_case_python_semantics(spark):
+    from edgar_finance_ontology_spark.functions.iri import (
+        iri_camel_case, iri_camel_case_col,
+    )
 
     cases = [
         "Information Technology", "Services-Prepackaged Software", "Top10",
@@ -33,6 +47,26 @@ def test_iri_camel_case_python_semantics():
         assert iri_camel_case(c) == _ref_iri_camel_case(c), c
     # the capitalize-lowers-the-tail quirk
     assert iri_camel_case("IBM Corp") == "IbmCorp"
+
+    # the native column reproduces the Python function, null -> ""
+    rng = random.Random(20240)
+    fuzz = [
+        "".join(rng.choice(_CAMEL_FUZZ_ALPHABET)
+                for _ in range(rng.randint(0, 24)))
+        for _ in range(5000)
+    ]
+    inputs = cases + fuzz
+    df = spark.createDataFrame(
+        [(i, s) for i, s in enumerate(inputs)], "i int, s string")
+    got = {
+        r["i"]: r["c"]
+        for r in df.select(
+            "i", iri_camel_case_col(F.col("s")).alias("c")).collect()
+    }
+    bad = [(s, got[i]) for i, s in enumerate(inputs)
+           if got[i] != iri_camel_case(s)]
+    assert not bad, bad[:5]
+    assert got[cases.index(None)] == ""
 
 
 def test_ttl_escape_and_iri_safe_cols(spark):

@@ -109,6 +109,38 @@ def test_aggregates_job_budget(spark, panel_inputs):
     assert 0 < len(jobs) <= AGG_JOB_BUDGET, sorted(jobs)
 
 
+def test_build_triples_runs_no_job(spark, panel_inputs):
+    """Building the triple plans is lazy: IRI camel-casing is a column
+    expression, so neither build_triples nor the global families (the
+    piece the incremental patcher shares) collects anything."""
+    from edgar_finance_ontology_spark.emit.triples import (
+        build_triples, global_family_triples,
+    )
+    from edgar_finance_ontology_spark.operators.benchmarks import (
+        compute_benchmarks,
+    )
+    from edgar_finance_ontology_spark.operators.observations import (
+        build_observations,
+    )
+    from edgar_finance_ontology_spark.operators.rankings import (
+        compute_rankings,
+    )
+
+    facts, companies = panel_inputs
+    obs = build_observations(facts, companies, 2024).localCheckpoint(
+        eager=True)
+    bench = compute_benchmarks(obs, 2024).localCheckpoint(eager=True)
+    rank = compute_rankings(obs, 2024).localCheckpoint(eager=True)
+    (trip, glob), jobs = _jobs_of(
+        spark.sparkContext, "job-budget:triples",
+        lambda: build_triples(obs, companies, bench, rank, 2024),
+        lambda: global_family_triples(obs, companies, bench, rank))
+
+    assert jobs == [], sorted(jobs)
+    assert set(trip.columns) == set(glob.columns) == {
+        "subj", "pred", "obj", "obj_is_literal", "obj_dtype"}
+
+
 # Summed expression text of the emission array with every metric on.
 # The staged form measures 33,979 chars; pasting each growth decision
 # tree into every entry that reads it measured 415,785.
@@ -152,14 +184,13 @@ def test_observation_triples_udf_nodes(spark):
     """The keep guard of the observation family tests the raw value
     natively, so only the value literal runs Python: the round trip and
     repr chain into one ArrowEvalPython node, and the computedFromMetric
-    branch runs none. With the shared camel map, as build_triples and
-    the patcher call it, the rounded-value guard measured 3 nodes. Rows
+    branch runs none. The rounded-value guard measured 3 nodes. Rows
     are pinned for null, NaN, ±inf, tiny and huge values and a derived
     row with computed_from."""
     from pyspark.sql import functions as F
 
     from edgar_finance_ontology_spark.emit.triples import (
-        _camel_value_map, observation_triples,
+        observation_triples,
     )
     from edgar_finance_ontology_spark.sources.schemas import (
         OBSERVATIONS_SCHEMA,
@@ -181,8 +212,7 @@ def test_observation_triples_udf_nodes(spark):
         + [row(20, 0.125, True, "NetIncome(cur),Revenue(cur)"),
            row(21, None, True, "NetIncome(cur),Revenue(cur)")],
         OBSERVATIONS_SCHEMA)
-    trip = observation_triples(
-        obs, camel_map=_camel_value_map([(obs, "unit")]))
+    trip = observation_triples(obs)
     got = trip.collect()
     plan = trip._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1, plan
