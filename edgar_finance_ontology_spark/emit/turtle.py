@@ -1,22 +1,17 @@
 """Canonical Turtle emission — byte-identical to the reference's
 emit_efin_ttl (select_xbrl_tags.py:96-612).
 
-Two paths share the same block builders:
+`turtle_text(...)` is the driver-side reference: it operates on
+canonically-ordered pandas frames of the CSV views (companies by cik,
+observations by (company, emission ord)) and returns ONE string,
+byte-comparable to the reference's output file. Tests use it and its
+block builders as the oracle; block building is pure Python because
+byte parity needs Python str.capitalize / repr(float) semantics.
 
-* `turtle_text(...)` — the golden presentation path: operates on
-  canonically-ordered pandas frames (companies by input order,
-  observations by (company, emission ord)) and returns ONE string,
-  byte-comparable to the reference's output file. Used by tests and
-  for final single-file export; block building is pure Python because
-  byte parity needs Python str.capitalize / repr(float) semantics.
-
-* `write_turtle_parts(...)` — the scale path: the observation family
-  (the only block family proportional to data volume) is rendered
-  per-partition via mapInPandas into ordered part files; the bounded
-  entity/benchmark/ranking families are rendered once on the driver.
-
-The semantic store (what P/R is measured on) is the triples DataFrame
-in emit/triples.py; Turtle is presentation.
+The scale path is emit/turtle_writer.py, which renders the same bytes
+natively in Spark from the triple families' entry arrays
+(emit/triples.py) in one sorted text write. The semantic store (what
+P/R is measured on) is the triples DataFrame; Turtle is presentation.
 """
 
 from __future__ import annotations

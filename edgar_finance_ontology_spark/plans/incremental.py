@@ -303,15 +303,10 @@ def run_incremental(
             "triples": None,
             "metrics": metrics,
         }
-    # restore the canonical (cik, emission-index) order the partitioned
-    # read-back loses — the Turtle writer renders families in arrival
-    # order, and the byte-parity contract (incremental store -> TTL ==
-    # scratch run -> TTL) depends on it
-    from .pipeline import canonical_observations_order
-
-    observations = canonical_observations_order(
-        spark.read.parquet(str(obs_dir)).drop("cik_bucket")
-    ).localCheckpoint(eager=True)
+    # read back in partition-directory order: no consumer depends on
+    # row order (the Turtle writer sorts on the canonical key itself)
+    observations = spark.read.parquet(str(obs_dir)).drop(
+        "cik_bucket").localCheckpoint(eager=True)
     _tick("obs_readback")
 
     # -- 5. bounded downstream aggregates: full recompute -----------

@@ -107,22 +107,26 @@ def run_pipeline(
     }
 
 
+def observations_order_key() -> list:
+    """The (cik, metric emission index) order build_observations emits
+    by construction, as sort columns."""
+    return [F.col("cik"), _emission_idx_col(F.col("metric")).alias("eidx"),
+            F.col("metric"), F.col("end")]
+
+
 def canonical_observations_order(obs: DataFrame) -> DataFrame:
-    """Restore the (cik, metric emission index) order build_observations
-    emits by construction — needed when observations round-trip
-    through a partitioned store (plans/incremental.py) whose read-back
-    order is by partition directory, not cik. The Turtle writer's
-    contract is 'families arrive canonically ordered'."""
-    return obs.orderBy(
-        "cik", _emission_idx_col(F.col("metric")), "metric", "end"
-    )
+    """Restore the order build_observations emits by construction, e.g.
+    after a round trip through a partitioned store whose read-back order
+    is by partition directory, not cik."""
+    return obs.orderBy(*observations_order_key())
 
 
-def canonical_benchmarks_order(benchmarks: DataFrame, obs: DataFrame) -> DataFrame:
-    """Order key = the reference's dict-insertion scan position
-    (compute_benchmarks, select_xbrl_tags.py:640-668): industry groups
-    first by first-occurrence of (industry, metric) scanning tags rows
-    in (cik, emission) order; then all-market groups by metric first
+def benchmarks_order_key(benchmarks: DataFrame, obs: DataFrame):
+    """(benchmarks + `_family`, `_fo` columns, sort columns). Order key =
+    the reference's dict-insertion scan position (compute_benchmarks,
+    select_xbrl_tags.py:640-668): industry groups first by
+    first-occurrence of (industry, metric) scanning tags rows in (cik,
+    emission) order; then all-market groups by metric first
     occurrence."""
     key_rows = obs.where(
         F.col("metric").isin(*BENCHMARK_RANKING_METRICS)
@@ -132,26 +136,25 @@ def canonical_benchmarks_order(benchmarks: DataFrame, obs: DataFrame) -> DataFra
         _emission_idx_col(F.col("metric")).alias("eidx"),
     )
     first_ind = key_rows.groupBy("industry", "metric").agg(
-        F.min(F.struct("cik", "eidx")).alias("fo")
+        F.min(F.struct("cik", "eidx")).alias("_fo")
     )
     first_all = key_rows.groupBy("metric").agg(
-        F.min(F.struct("cik", "eidx")).alias("fo")
-    )
-    ind_b = benchmarks.where(F.col("industry") != "").join(
-        first_ind, ["industry", "metric"], "left"
-    ).withColumn("family", F.lit(0))
-    all_b = benchmarks.where(F.col("industry") == "").join(
-        first_all, ["metric"], "left"
-    ).withColumn("family", F.lit(1))
-    return (
-        ind_b.unionByName(all_b)
-        .orderBy("family", F.col("fo.cik"), F.col("fo.eidx"))
-        .drop("fo", "family")
-    )
+        F.min(F.struct("cik", "eidx")).alias("_fo")
+    ).withColumn("industry", F.lit(""))
+    keyed = benchmarks.join(
+        first_ind.unionByName(first_all), ["industry", "metric"], "left"
+    ).withColumn("_family", F.when(F.col("industry") != "", 0).otherwise(1))
+    return keyed, [F.col("_family"), F.col("_fo.cik"), F.col("_fo.eidx")]
 
 
-def canonical_rankings_order(rankings: DataFrame) -> DataFrame:
-    """Order key = compute_rankings' append order
+def canonical_benchmarks_order(benchmarks: DataFrame, obs: DataFrame) -> DataFrame:
+    b, key = benchmarks_order_key(benchmarks, obs)
+    return b.orderBy(*key).drop("_fo", "_family")
+
+
+def rankings_order_key(rankings: DataFrame):
+    """(rankings + `_family`, `_cik0`, `_kidx`, `_t` columns, sort
+    columns). Order key = compute_rankings' append order
     (select_xbrl_tags.py:780-1037): see module docstring."""
     is_comp = F.col("metric") == "Composite"
     scoped = F.col("industry") != ""
@@ -170,14 +173,19 @@ def canonical_rankings_order(rankings: DataFrame) -> DataFrame:
     first_cik_ind = F.min("cik").over(grp_ind)
     order_cik = F.when(is_comp, first_cik_ind).otherwise(first_cik)
     type_ord = F.when(F.col("ranking_type") == "Top10", 0).otherwise(1)
-    return (
+    keyed = (
         rankings.withColumn("_family", family)
         .withColumn("_cik0", order_cik)
         .withColumn("_kidx", kidx)
         .withColumn("_t", type_ord)
-        .orderBy("_family", "_cik0", "_kidx", "_t", "rank")
-        .drop("_family", "_cik0", "_kidx", "_t")
     )
+    return keyed, [F.col(c) for c in ("_family", "_cik0", "_kidx", "_t",
+                                      "rank")]
+
+
+def canonical_rankings_order(rankings: DataFrame) -> DataFrame:
+    r, key = rankings_order_key(rankings)
+    return r.orderBy(*key).drop("_family", "_cik0", "_kidx", "_t")
 
 
 def golden_turtle(

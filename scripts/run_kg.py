@@ -149,16 +149,16 @@ def main():
     ).partitionBy("pred").parquet(f"{args.out}/triples")
     n = spark.read.parquet(f"{args.out}/triples").count()
 
-    # fully distributed Turtle render: every unbounded block family
-    # (companies/observations/benchmarks/rankings) renders in executors
-    # via mapInPandas and lands as ordered text part-files; the driver
-    # only streams the pieces into one file (peak driver memory = one
-    # part, not the document). Byte-identical to the reference's
-    # --emit-ttl output — parity-tested in tests/test_run_kg.py. No
-    # toPandas() executes anywhere in this deploy flow.
+    # fully distributed Turtle render: every block renders natively in
+    # executors from the triple families' entry arrays, and the whole
+    # document lands as ordered text part-files of one range-sorted
+    # write; the driver only streams the part files into one file (peak
+    # driver memory = one part, not the document). Byte-identical to
+    # the reference's --emit-ttl output — parity-tested in
+    # tests/test_run_kg.py. No toPandas() executes anywhere in this
+    # deploy flow.
     # a re-run with the same --out must never concatenate STALE pieces
-    # from a previous run (glue files are skipped when a family is
-    # empty, so leftovers would silently reappear in instances.ttl)
+    # from a previous run into instances.ttl
     import shutil
 
     shutil.rmtree(f"{args.out}/ttl_parts", ignore_errors=True)

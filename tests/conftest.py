@@ -14,15 +14,23 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def panel_dir(tmp_path_factory):
-    """Synthetic panel written to disk + the reference script's outputs
-    on it (the golden oracle)."""
+def synthetic_panel(tmp_path_factory):
+    """The 12-company synthetic panel written to disk (companyfacts +
+    submissions JSON), without running the reference script."""
     from edgar_finance_ontology_spark.sources.synthetic import (
         write_reference_inputs,
     )
 
     d = tmp_path_factory.mktemp("panel")
-    out = write_reference_inputs(d)
+    return {"dir": d, **write_reference_inputs(d)}
+
+
+@pytest.fixture(scope="session")
+def panel_dir(synthetic_panel):
+    """The synthetic panel + the reference script's outputs on it (the
+    golden oracle)."""
+    out = synthetic_panel
+    d = out["dir"]
     cmd = [
         sys.executable, "/root/reference/scripts/select_xbrl_tags.py",
         "--fy", "2024",
@@ -38,11 +46,11 @@ def panel_dir(tmp_path_factory):
     ]
     r = subprocess.run(cmd, capture_output=True, text=True, cwd=d)
     assert r.returncode == 0, r.stderr[-2000:]
-    return {"dir": d, **out}
+    return out
 
 
 @pytest.fixture(scope="session")
-def engine_inputs(spark, panel_dir):
+def engine_inputs(spark, synthetic_panel):
     """(facts_df, companies_df) read through our JSON source path."""
     from edgar_finance_ontology_spark.sources.facts import (
         build_companies,
@@ -51,8 +59,8 @@ def engine_inputs(spark, panel_dir):
         read_submissions_json,
     )
 
-    facts_glob = str(panel_dir["dir"] / "facts" / "*.json")
-    subs_glob = panel_dir["subs_cache_dir"] + "/*.json"
+    facts_glob = str(synthetic_panel["dir"] / "facts" / "*.json")
+    subs_glob = synthetic_panel["subs_cache_dir"] + "/*.json"
     cf = read_companyfacts_json(spark, facts_glob)
     subs = read_submissions_json(spark, subs_glob)
     facts = explode_facts(cf).cache()

@@ -7,7 +7,8 @@ that adds a stray action or an unfused selection pass shows up here as
 extra jobs. The budget is the measured count (14 jobs on the 12-company
 panel, local[4], 4 shuffle partitions) plus 2 for AQE, which can plan
 one job more or less between builds. The same rule sets the budget of
-the aggregates (benchmarks + rankings) checkpoints.
+the aggregates (benchmarks + rankings) checkpoints and of the Turtle
+write.
 
 Python UDF stages are guarded by their `ArrowEvalPython` node count:
 at small scale each Python task pays a fixed start of a tenth of a
@@ -28,6 +29,13 @@ OBS_JOB_BUDGET = OBS_JOBS_MEASURED + 2
 # one checkpoint of its rounded rows
 AGG_JOBS_MEASURED = 13
 AGG_JOB_BUDGET = AGG_JOBS_MEASURED + 2
+# write_turtle_document on the same panel, from checkpointed tables:
+# one range-sorted text write (a hash exchange, the sort's sampling job
+# and shuffle) plus the canonical-key and dimension aggregations; the
+# writer it replaced (four mapInPandas writes over CSV frames, five
+# driver collects) measured 33
+TURTLE_JOBS_MEASURED = 10
+TURTLE_JOB_BUDGET = TURTLE_JOBS_MEASURED + 2
 # (rows, xxhash64 sum) of test_observation_triples_udf_nodes' triples,
 # taken with the rounded-value keep guard
 OBS_TRIPLES_DIGEST = (97, "29182526452926444697")
@@ -51,21 +59,18 @@ def _jobs_of(sc, group: str, *fns):
 
 
 @pytest.fixture(scope="module")
-def panel_inputs(spark, tmp_path_factory):
+def panel_inputs(spark, synthetic_panel):
     """The 12-company synthetic panel's facts and companies,
     checkpointed as run_pipeline hands them to the selection."""
     from edgar_finance_ontology_spark.sources.facts import (
         build_companies, explode_facts, read_companyfacts_json,
         read_submissions_json,
     )
-    from edgar_finance_ontology_spark.sources.synthetic import (
-        write_reference_inputs,
-    )
 
-    d = tmp_path_factory.mktemp("job_budget_panel")
-    paths = write_reference_inputs(d)
+    d = synthetic_panel["dir"]
     cf = read_companyfacts_json(spark, str(d / "facts" / "*.json"))
-    subs = read_submissions_json(spark, paths["subs_cache_dir"] + "/*.json")
+    subs = read_submissions_json(
+        spark, synthetic_panel["subs_cache_dir"] + "/*.json")
     facts = explode_facts(cf).localCheckpoint(eager=True)
     companies = build_companies(cf, subs).localCheckpoint(eager=True)
     return facts, companies
@@ -107,6 +112,67 @@ def test_aggregates_job_budget(spark, panel_inputs):
 
     assert bench.count() > 0 and rank.count() > 0
     assert 0 < len(jobs) <= AGG_JOB_BUDGET, sorted(jobs)
+
+
+@pytest.fixture(scope="module")
+def panel_tables(panel_inputs):
+    """(companies, observations, benchmarks, rankings) of the panel at
+    fy 2024, checkpointed as run_pipeline returns them."""
+    from edgar_finance_ontology_spark.operators.benchmarks import (
+        compute_benchmarks,
+    )
+    from edgar_finance_ontology_spark.operators.observations import (
+        build_observations,
+    )
+    from edgar_finance_ontology_spark.operators.rankings import (
+        compute_rankings,
+    )
+
+    facts, companies = panel_inputs
+    obs = build_observations(facts, companies, 2024).localCheckpoint(
+        eager=True)
+    bench = compute_benchmarks(obs, 2024).localCheckpoint(eager=True)
+    rank = compute_rankings(obs, 2024).localCheckpoint(eager=True)
+    return companies, obs, bench, rank
+
+
+@pytest.mark.parametrize("scopes", [(False, False), (True, True)])
+def test_turtle_write_job_budget(spark, panel_tables, tmp_path, scopes):
+    """The Turtle write runs a bounded number of jobs, and its document
+    equals turtle_text over the same frames with the industry and
+    sector scopes both off and both on."""
+    from edgar_finance_ontology_spark.emit.csv_format import (
+        benchmarks_csv_frame, observations_csv_frame, rankings_csv_frame,
+    )
+    from edgar_finance_ontology_spark.emit.turtle import turtle_text
+    from edgar_finance_ontology_spark.emit.turtle_writer import (
+        concat_turtle_parts, write_turtle_document,
+    )
+    from edgar_finance_ontology_spark.plans.pipeline import (
+        canonical_benchmarks_order, canonical_observations_order,
+        canonical_rankings_order,
+    )
+
+    companies, obs, bench, rank = panel_tables
+    out = str(tmp_path / "ttl")
+    _, jobs = _jobs_of(
+        spark.sparkContext, f"job-budget:turtle:{scopes}",
+        lambda: write_turtle_document(
+            out, companies, obs, bench, rank, *scopes, fy=2024))
+
+    assert 0 < len(jobs) <= TURTLE_JOB_BUDGET, sorted(jobs)
+    want = turtle_text(
+        companies.orderBy("cik").toPandas(),
+        observations_csv_frame(canonical_observations_order(obs)).toPandas(),
+        benchmarks_csv_frame(canonical_benchmarks_order(bench, obs)).toPandas(),
+        rankings_csv_frame(canonical_rankings_order(rank)).toPandas(),
+        *scopes,
+    )
+    got = concat_turtle_parts(out)
+    if got != want:
+        for i, (a, b) in enumerate(zip(got.splitlines(), want.splitlines())):
+            assert a == b, f"line {i}:\ngot : {a!r}\nwant: {b!r}"
+    assert got == want
 
 
 def test_build_triples_runs_no_job(spark, panel_inputs):

@@ -43,7 +43,21 @@ def test_triple_set_precision_recall(panel_dir, engine_inputs):
     assert p >= 0.95 and r >= 0.95, (p, r, len(ours), len(ref))
 
 
-def test_triples_df_consistent_with_turtle(panel_dir, engine_inputs):
+def _rendered_triples(trip) -> set:
+    """(subj, pred, obj as Turtle prints it) of a triple table."""
+    return {
+        (r["subj"], r["pred"], r["obj_rendered"])
+        for r in trip.selectExpr(
+            "subj", "pred",
+            """CASE WHEN NOT obj_is_literal THEN obj
+                    WHEN obj_dtype IN ('xsd:integer', 'xsd:boolean') THEN obj
+                    WHEN obj_dtype IS NULL THEN concat('"', obj, '"')
+                    ELSE concat('"', obj, '"^^', obj_dtype) END AS obj_rendered""",
+        ).collect()
+    }
+
+
+def test_triples_df_consistent_with_turtle(engine_inputs):
     """The distributed triples DataFrame (the semantic store) must
     carry the same triple set the Turtle text renders."""
     from edgar_finance_ontology_spark.emit.triples import build_triples
@@ -56,18 +70,36 @@ def test_triples_df_consistent_with_turtle(panel_dir, engine_inputs):
     trip = build_triples(
         t["observations"], companies, t["benchmarks"], t["rankings"], fy=2024
     )
-    ours = {
-        (r["subj"], r["pred"], r["obj_rendered"])
-        for r in trip.selectExpr(
-            "subj", "pred",
-            """CASE WHEN NOT obj_is_literal THEN obj
-                    WHEN obj_dtype IN ('xsd:integer', 'xsd:boolean') THEN obj
-                    WHEN obj_dtype IS NULL THEN concat('"', obj, '"')
-                    ELSE concat('"', obj, '"^^', obj_dtype) END AS obj_rendered""",
-        ).collect()
-    }
+    ours = _rendered_triples(trip)
     ttl = parse_ttl_triples(golden_turtle(facts, companies, fy=2024))
     missing = ttl - ours
     extra = ours - ttl
     assert not missing, f"{len(missing)} missing, e.g. {sorted(missing)[:5]}"
     assert not extra, f"{len(extra)} extra, e.g. {sorted(extra)[:5]}"
+
+
+def test_industry_sector_is_first_company_wins(spark):
+    """An industry's inSectorOf comes from its FIRST company by cik,
+    and there is none when that company has no sector — even if a later
+    company of the industry has one (select_xbrl_tags.py:190-192)."""
+    from edgar_finance_ontology_spark.emit.csv_format import (
+        observations_csv_frame,
+    )
+    from edgar_finance_ontology_spark.emit.triples import build_triples
+    from edgar_finance_ontology_spark.emit.turtle import turtle_text
+    from edgar_finance_ontology_spark.sources.schemas import (
+        COMPANIES_SCHEMA, OBSERVATIONS_SCHEMA,
+    )
+
+    companies = spark.createDataFrame(
+        [("A", "0000000001", "Alpha", "", "Widgets", "", "", "1231"),
+         ("B", "0000000002", "Beta", "Tech", "Widgets", "", "", "1231")],
+        COMPANIES_SCHEMA)
+    obs = spark.createDataFrame([], OBSERVATIONS_SCHEMA)
+    ours = _rendered_triples(build_triples(obs, companies))
+    ttl = parse_ttl_triples(turtle_text(
+        companies.orderBy("cik").toPandas(),
+        observations_csv_frame(obs).toPandas()))
+    assert ("efin:IndustryWidgets", "efin:inSectorOf", "efin:SectorTech") \
+        not in ttl
+    assert ours == ttl

@@ -80,6 +80,37 @@ def test_concat_to_file_matches_in_memory(tmp_path):
     assert dest.read_text() == concat_turtle_parts(str(d))
 
 
+def test_carriage_return_in_literal_reads_back_as_written(spark, tmp_path):
+    """The Turtle escape leaves a "\\r" inside a literal raw, so both
+    readers of the part files must keep it: the in-memory and the
+    streamed document equal turtle_text."""
+    from edgar_finance_ontology_spark.emit.csv_format import (
+        observations_csv_frame,
+    )
+    from edgar_finance_ontology_spark.emit.turtle import turtle_text
+    from edgar_finance_ontology_spark.emit.turtle_writer import (
+        concat_turtle_parts, concat_turtle_parts_to_file,
+        write_turtle_document,
+    )
+    from edgar_finance_ontology_spark.sources.schemas import (
+        COMPANIES_SCHEMA, OBSERVATIONS_SCHEMA,
+    )
+
+    companies = spark.createDataFrame(
+        [("ACME", "0000000001", "Acme\rCorp", "Tech", "Widgets", "3571",
+          "Computers", "1231")], COMPANIES_SCHEMA)
+    obs = spark.createDataFrame([], OBSERVATIONS_SCHEMA)
+    out = str(tmp_path / "parts")
+    write_turtle_document(out, companies, obs)
+    want = turtle_text(companies.toPandas(),
+                       observations_csv_frame(obs).toPandas())
+    assert '"Acme\rCorp"' in want
+    assert concat_turtle_parts(out) == want
+    dest = tmp_path / "doc.ttl"
+    concat_turtle_parts_to_file(out, str(dest))
+    assert dest.read_bytes().decode("utf-8") == want
+
+
 def test_run_kg_incremental_store_mode(tmp_path):
     """Deploy-path maintenance mode: --incremental-store produces a
     byte-identical instances.ttl to the full-rebuild deploy run, and a

@@ -1,25 +1,29 @@
-"""Distributed observation-block rendering == driver-side blocks."""
+"""Distributed Turtle rendering == driver-side blocks."""
 
 
 def test_distributed_observation_blocks_match_driver(spark, engine_inputs):
+    from pyspark.sql import functions as F
+
     from edgar_finance_ontology_spark.emit.csv_format import (
         observations_csv_frame,
     )
+    from edgar_finance_ontology_spark.emit.triples import OBSERVATIONS
     from edgar_finance_ontology_spark.emit.turtle import observation_block
     from edgar_finance_ontology_spark.emit.turtle_writer import (
-        observation_lines_df,
+        turtle_document,
     )
     from edgar_finance_ontology_spark.operators.observations import (
         build_observations,
     )
 
     facts, companies = engine_inputs
-    obs = observations_csv_frame(
-        build_observations(facts, companies, fy=2024)
-    )
+    engine_obs = build_observations(facts, companies, fy=2024)
+    obs = observations_csv_frame(engine_obs)
     dist = {
-        (r["cik"], r["metric"]): r["block"]
-        for r in observation_lines_df(obs, {}).collect()
+        (r["k_obs"]["cik"], r["k_obs"]["metric"]): r["text"]
+        for r in turtle_document(companies, engine_obs)
+        .where((F.col("sec") == OBSERVATIONS) & F.col("k_obs").isNotNull())
+        .collect()
     }
     seen = {"units": set(), "currencies": set(), "concepts": {},
             "sectors": set(), "industries": set(), "industry_sector": {}}
@@ -84,19 +88,22 @@ def test_instance_dims_dedupe_mixed_case_currencies(spark):
     """'usd' and 'USD' units must emit ONE efin:CurrencyUSD line —
     matching turtle_text's seen['currencies'] set semantics."""
     from edgar_finance_ontology_spark.emit.turtle_writer import (
-        _instance_dim_lines,
+        turtle_document,
+    )
+    from edgar_finance_ontology_spark.sources.schemas import (
+        COMPANIES_SCHEMA, OBSERVATIONS_SCHEMA,
     )
 
-    rows = [
-        ("1", "Revenue", "2024", "duration", "1.0", "usd", "us-gaap:Revenues"),
-        ("2", "Revenue", "2024", "duration", "2.0", "USD", "us-gaap:Revenues"),
-    ]
+    def row(cik, value, unit):
+        return (cik, "", "", "", "", "", "", "", 2024, "Revenue", False,
+                value, unit, "duration", "", "", "", "", "us-gaap:Revenues",
+                "", "", 1.0, "", "")
+
     df = spark.createDataFrame(
-        rows,
-        "cik string, metric string, fy string, period_type string, "
-        "value string, unit string, selected_tag string",
-    )
-    lines = _instance_dim_lines(df)
+        [row("1", 1.0, "usd"), row("2", 2.0, "USD")], OBSERVATIONS_SCHEMA)
+    companies = spark.createDataFrame([], COMPANIES_SCHEMA)
+    lines = [ln for r in turtle_document(companies, df).collect()
+             for ln in r["text"].split("\n")]
     cur = [ln for ln in lines if ln.startswith("efin:CurrencyUSD ")]
     assert cur == ["efin:CurrencyUSD a efin:Currency ."]
     # units keep turtle_text's raw-string set semantics: both spellings
@@ -113,10 +120,8 @@ def test_multi_fy_rankings_use_first_canonical_row_fy(
     take the FIRST canonical-order row's fy, exactly like turtle_text
     (turtle.py rank_rows[0]) — NOT the lexicographic min, which for a
     multi-fy input picks a different year (round-3 advice item)."""
-    import os
-
     from edgar_finance_ontology_spark.emit.turtle_writer import (
-        write_turtle_document,
+        concat_turtle_parts, write_turtle_document,
     )
     from edgar_finance_ontology_spark.plans.pipeline import (
         canonical_rankings_order, run_pipeline,
@@ -133,12 +138,7 @@ def test_multi_fy_rankings_use_first_canonical_row_fy(
     write_turtle_document(
         out, companies, t["observations"], None, rankings
     )
-    text = ""
-    rank_dir = os.path.join(out, "08-rankings")
-    for name in sorted(os.listdir(rank_dir)):
-        if name.startswith("part-"):
-            with open(os.path.join(rank_dir, name), encoding="utf-8") as f:
-                text += f.read()
+    text = concat_turtle_parts(out)
     assert "efin:forFiscalYear 2024 ;" in text
     assert "efin:forFiscalYear 2019 ;" not in text
 
@@ -151,7 +151,7 @@ def test_ranking_fy_falls_back_to_first_observation(
     turtle_text (select_xbrl_tags parity) — round-2 advice item."""
     from pyspark.sql import functions as F
     from edgar_finance_ontology_spark.emit.turtle_writer import (
-        write_turtle_document,
+        concat_turtle_parts, write_turtle_document,
     )
     from edgar_finance_ontology_spark.plans.pipeline import run_pipeline
 
@@ -164,13 +164,5 @@ def test_ranking_fy_falls_back_to_first_observation(
     write_turtle_document(
         out, companies, t["observations"], None, blank_fy
     )
-    import os
-
-    parts = []
-    rank_dir = os.path.join(out, "08-rankings")
-    for name in sorted(os.listdir(rank_dir)):
-        if name.startswith("part-"):
-            with open(os.path.join(rank_dir, name), encoding="utf-8") as f:
-                parts.append(f.read())
-    text = "".join(parts)
+    text = concat_turtle_parts(out)
     assert "efin:forFiscalYear 2024 ;" in text
