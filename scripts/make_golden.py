@@ -29,7 +29,8 @@ REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "tests"))
 
-REFERENCE = "/root/reference/scripts/select_xbrl_tags.py"
+from reference_script import REFERENCE_SCRIPT  # noqa: E402
+
 GOLDEN_DIR = REPO / "tests" / "golden"
 
 
@@ -40,7 +41,7 @@ def run_reference(workdir: pathlib.Path) -> dict:
 
     out = write_reference_inputs(workdir, n_companies=12)
     cmd = [
-        sys.executable, REFERENCE,
+        sys.executable, str(REFERENCE_SCRIPT),
         "--fy", "2024",
         "--facts", *out["facts_paths"],
         "--subs-cache-dir", out["subs_cache_dir"],

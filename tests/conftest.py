@@ -1,7 +1,12 @@
+import pathlib
 import subprocess
 import sys
 
 import pytest
+
+from reference_script import REFERENCE_ABSENT, REFERENCE_SCRIPT
+
+GOLDEN = pathlib.Path(__file__).parent / "golden"
 
 
 @pytest.fixture(scope="session")
@@ -28,11 +33,13 @@ def synthetic_panel(tmp_path_factory):
 @pytest.fixture(scope="session")
 def panel_dir(synthetic_panel):
     """The synthetic panel + the reference script's outputs on it (the
-    golden oracle)."""
+    golden oracle). Skips where the reference script is absent."""
+    if not REFERENCE_SCRIPT.exists():
+        pytest.skip(REFERENCE_ABSENT)
     out = synthetic_panel
     d = out["dir"]
     cmd = [
-        sys.executable, "/root/reference/scripts/select_xbrl_tags.py",
+        sys.executable, str(REFERENCE_SCRIPT),
         "--fy", "2024",
         "--facts", *out["facts_paths"],
         "--subs-cache-dir", out["subs_cache_dir"],
@@ -47,6 +54,35 @@ def panel_dir(synthetic_panel):
     r = subprocess.run(cmd, capture_output=True, text=True, cwd=d)
     assert r.returncode == 0, r.stderr[-2000:]
     return out
+
+
+@pytest.fixture(scope="session")
+def reference_tags(request):
+    """The reference's tags rows on the synthetic panel, all-string: its
+    tags.csv where the script exists, else the committed golden that
+    scripts/make_golden.py wrote from the same panel."""
+    import pandas as pd
+
+    if REFERENCE_SCRIPT.exists():
+        d = request.getfixturevalue("panel_dir")["dir"]
+        return pd.read_csv(d / "tags.csv", dtype=str).fillna("")
+    return pd.read_parquet(GOLDEN / "kg_observations.parquet").astype(str)
+
+
+@pytest.fixture(scope="session")
+def reference_triples(request):
+    """The reference's (subj, pred, obj) triple set on the synthetic
+    panel: parsed from its instances.ttl where the script exists, else
+    the committed golden that scripts/make_golden.py wrote from it."""
+    import pandas as pd
+
+    from ttl_utils import parse_ttl_triples
+
+    if REFERENCE_SCRIPT.exists():
+        d = request.getfixturevalue("panel_dir")["dir"]
+        return parse_ttl_triples((d / "instances.ttl").read_text())
+    pdf = pd.read_parquet(GOLDEN / "kg_triples.parquet").astype(str)
+    return set(pdf.itertuples(index=False, name=None))
 
 
 @pytest.fixture(scope="session")

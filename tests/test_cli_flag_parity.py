@@ -8,12 +8,13 @@ import sys
 import pandas as pd
 import pytest
 
+from reference_script import REFERENCE_SCRIPT
 from test_parity_observations import CSV_COLS
 
 
 def _run_reference(panel_dir, tmp_path, extra_args):
     cmd = [
-        sys.executable, "/root/reference/scripts/select_xbrl_tags.py",
+        sys.executable, str(REFERENCE_SCRIPT),
         "--facts", *panel_dir["facts_paths"],
         "--subs-cache-dir", panel_dir["subs_cache_dir"],
         "--out-tags", str(tmp_path / "tags.csv"),

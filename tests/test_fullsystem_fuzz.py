@@ -24,6 +24,7 @@ import sys
 import pandas as pd
 import pytest
 
+from reference_script import REFERENCE_ABSENT, REFERENCE_SCRIPT
 from test_parity_observations import CSV_COLS
 
 SECTORS = ["Information Technology", "Financials", "Utilities", "Energy",
@@ -109,6 +110,7 @@ def _random_company(rng: random.Random, i: int, qnames: list[str]) -> dict:
     }
 
 
+@pytest.mark.skipif(not REFERENCE_SCRIPT.exists(), reason=REFERENCE_ABSENT)
 @pytest.mark.parametrize("seed,fy", [(11, 2024), (12, 2024), (13, 2023)])
 def test_fullsystem_fuzz_panel(spark, tmp_path, seed, fy):
     from datetime import datetime
@@ -145,7 +147,7 @@ def test_fullsystem_fuzz_panel(spark, tmp_path, seed, fy):
         paths.append(str(p))
 
     cmd = [
-        sys.executable, "/root/reference/scripts/select_xbrl_tags.py",
+        sys.executable, str(REFERENCE_SCRIPT),
         "--fy", str(fy), "--facts", *sorted(paths),
         "--subs-cache-dir", str(subs_dir),
         "--out-tags", str(tmp_path / "tags.csv"),

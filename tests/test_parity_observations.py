@@ -1,9 +1,10 @@
 """Golden parity: our observations table vs the reference's tags CSV.
 
 The reference script itself runs on the same synthetic panel
-(conftest.panel_dir) and its tags_{fy}.csv is the oracle. We compare
-the full 24-column row set, including %.6f value and %.3f confidence
-formatting.
+(conftest.panel_dir) and its tags_{fy}.csv is the oracle; where the
+script is absent, the observations test reads the committed golden of
+that CSV (conftest.reference_tags). We compare the full 24-column row
+set, including %.6f value and %.3f confidence formatting.
 """
 
 import pandas as pd
@@ -22,7 +23,7 @@ def _ours_as_csv_frame(df) -> pd.DataFrame:
     return observations_csv_frame(df).toPandas()
 
 
-def test_observations_match_reference(spark, panel_dir, engine_inputs):
+def test_observations_match_reference(spark, reference_tags, engine_inputs):
     from edgar_finance_ontology_spark.operators.observations import (
         build_observations,
     )
@@ -30,7 +31,7 @@ def test_observations_match_reference(spark, panel_dir, engine_inputs):
     facts, companies = engine_inputs
     ours = _ours_as_csv_frame(build_observations(facts, companies, fy=2024))
 
-    ref = pd.read_csv(panel_dir["dir"] / "tags.csv", dtype=str).fillna("")
+    ref = reference_tags
     ours = ours[CSV_COLS].astype(str)
     ref = ref[CSV_COLS].astype(str)
 

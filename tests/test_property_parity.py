@@ -16,7 +16,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/reference/scripts")
+from reference_script import REFERENCE_SCRIPT
+
+sys.path.insert(0, str(REFERENCE_SCRIPT.parent))
 ref = pytest.importorskip("select_xbrl_tags")
 
 

@@ -5,7 +5,9 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/reference/scripts")
+from reference_script import REFERENCE_SCRIPT
+
+sys.path.insert(0, str(REFERENCE_SCRIPT.parent))
 
 WIKI_HTML = b"""
 <html><body><nav>skip</nav>
