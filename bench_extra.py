@@ -27,6 +27,13 @@ Modes (first CLI arg):
                         (ArrowEvalPython / MapInPandas / BatchEvalPython
                         scopes), how many took >= 60 ms and their slot
                         seconds, and the call's job count.
+  codegen [seed]      — one session shaped like perfbench's: a kg build,
+                        a cold store and two late-page patches on the
+                        12-company perfbench panel (default seed 1). One
+                        JSON line per call: generated classes compiled,
+                        their compile milliseconds, and the call's wall
+                        seconds (a call that reuses the session's
+                        compiled classes compiles none).
 """
 
 from __future__ import annotations
@@ -515,6 +522,70 @@ def run_pytasks(seed: int = 1):
                   flush=True)
 
 
+def run_codegen(seed: int = 1):
+    """How many generated classes each call of a build and of later
+    patches compiles, in one session."""
+    import json
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from edgar_finance_ontology_spark.plans.incremental import (
+        run_incremental,
+    )
+    from perfbench import inputs
+    from perfbench.run import close_session, import_package, open_session
+    from perfbench.trace import Tracer
+    from perfbench.workloads import build_graph
+
+    import_package()
+    with tempfile.TemporaryDirectory() as work:
+        pages_path, store = f"{work}/pages", f"{work}/store"
+        inputs.write_pages(inputs.page_rows(12, seed), pages_path)
+        spark = open_session(work)
+        jvm = spark._jvm
+        metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+        generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+            .CodeGenerator
+
+        def call(name, fn):
+            n0 = metrics.METRIC_COMPILATION_TIME().getCount()
+            ns0 = generator.compileTime()
+            t0 = time.monotonic()
+            value = fn()
+            print(json.dumps({
+                "call": name, "seed": seed,
+                "compiles": metrics.METRIC_COMPILATION_TIME().getCount() - n0,
+                "compile_ms": round((generator.compileTime() - ns0) / 1e6),
+                "wall_s": round(time.monotonic() - t0, 3),
+            }), flush=True)
+            return value
+
+        def patch(round_no, row):
+            inputs.write_pages([inputs.late_page(row, round_no)], pages_path,
+                               prefix=f"late-{round_no}", n_files=1)
+            t = run_incremental(spark, spark.read.parquet(pages_path),
+                                inputs.FY, store)
+            if t["metrics"]["n_dirty"] != 1:
+                raise SystemExit(f"late page patched {t['metrics']}")
+            return t
+
+        try:
+            call("build_cold", lambda: build_graph(
+                spark, Tracer(spark, enabled=False), pages_path,
+                f"{work}/kg"))
+            cold = call("store_cold", lambda: run_incremental(
+                spark, spark.read.parquet(pages_path), inputs.FY, store))
+            revenue = sorted(
+                cold["observations"].where(
+                    (F.col("metric") == "Revenue") & ~F.col("is_derived"))
+                .collect(), key=lambda r: r["cik"])
+            call("patch", lambda: patch(0, revenue[0]))
+            call("patch2", lambda: patch(1, revenue[1]))
+        finally:
+            close_session(spark)
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     args = sys.argv[2:]
@@ -540,6 +611,8 @@ if __name__ == "__main__":
         run_obsplan(int(args[0]) if args else 1)
     elif mode == "pytasks":
         run_pytasks(int(args[0]) if args else 1)
+    elif mode == "codegen":
+        run_codegen(int(args[0]) if args else 1)
     elif mode == "oracle":
         from edgar_finance_ontology_spark.queries import QUERIES
 

@@ -478,18 +478,20 @@ def build_triples(
     construction (one block per key), so no global shuffle-dedup is
     needed; only the bounded dim families get a safety dropDuplicates
     (SectorAll could collide with a literal 'All' sector)."""
-    parts = [
-        company_triples(companies),
-        global_family_triples(
-            observations, companies, benchmarks, rankings,
-            include_industry_scope, include_sector_scope,
-        ),
-        observation_triples(observations),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    dims, valued = _global_families(
+        observations, companies, benchmarks, rankings,
+        include_industry_scope, include_sector_scope,
+    )
+    # the observation, benchmark and ranking families run the value-repr
+    # UDFs; one hash exchange runs them once, in its map stage, so a
+    # range-partitioned write samples (and re-samples) its output
+    # instead of rendering every block again per sampling job. Under a
+    # union, not on top: a repartition directly below the write's
+    # repartitionByRange would be collapsed into it
+    udf_families = functools.reduce(
+        DataFrame.unionByName, valued, observation_triples(observations))
+    return company_triples(companies).unionByName(dims).unionByName(
+        udf_families.repartition("pred", "subj"))
 
 
 def global_family_triples(
@@ -507,13 +509,30 @@ def global_family_triples(
     row is part of the dimension aggregation, derived lazily inside the
     plan rather than by a driver probe of the benchmark and ranking
     frames."""
+    dims, valued = _global_families(
+        observations, companies, benchmarks, rankings,
+        include_industry_scope, include_sector_scope,
+    )
+    return functools.reduce(DataFrame.unionByName, valued, dims)
+
+
+def _global_families(
+    observations: DataFrame,
+    companies: DataFrame,
+    benchmarks: DataFrame | None,
+    rankings: DataFrame | None,
+    include_industry_scope: bool,
+    include_sector_scope: bool,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """(dimension triples, [benchmark triples, ranking triples]): the
+    bounded global families, split where the value-repr UDFs start."""
     dims = dimension_blocks(companies, observations, benchmarks, rankings)
     out = _explode(dims.where(F.col("subj").isNotNull())).dropDuplicates(
         ["subj", "pred", "obj"])
+    valued = []
     if benchmarks is not None:
-        out = out.unionByName(benchmark_triples(
-            benchmarks, include_industry_scope))
+        valued.append(benchmark_triples(benchmarks, include_industry_scope))
     if rankings is not None:
-        out = out.unionByName(ranking_triples(
+        valued.append(ranking_triples(
             rankings, include_industry_scope, include_sector_scope))
-    return out
+    return out, valued

@@ -60,6 +60,16 @@ def cik_bucket_col(cik, n_buckets: int):
         .cast("int")
 
 
+def _bucket_counts(ciks: DataFrame, n_buckets: int) -> dict[int, int]:
+    """{cik bucket: rows} of a frame of ciks, in one grouped collect of
+    at most ``n_buckets`` rows."""
+    return {
+        r["b"]: r["n"] for r in ciks.groupBy(
+            cik_bucket_col(F.col("cik"), n_buckets).alias("b")
+        ).agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+
+
 def _exists(path: pathlib.Path) -> bool:
     return path.exists() and any(path.iterdir())
 
@@ -213,11 +223,8 @@ def run_incremental(
         .unionByName(new_prof.select("cik"))
         .distinct().localCheckpoint(eager=True)
     )
-    cand_buckets = sorted({
-        r["b"] for r in candidates.select(
-            cik_bucket_col(F.col("cik"), n_cik_buckets).alias("b")
-        ).distinct().collect()
-    })
+    cand_counts = _bucket_counts(candidates, n_cik_buckets)
+    cand_buckets = sorted(cand_counts)
     if _exists(rec_dir) and cand_buckets:
         recs_cand = (
             spark.read.parquet(str(rec_dir))
@@ -243,18 +250,16 @@ def run_incremental(
     else:
         dirty = m_cand.select("cik")
     dirty = dirty.localCheckpoint(eager=True)
-    metrics["n_candidates"] = candidates.count()
-    metrics["n_dirty"] = dirty.count()
+    dirty_counts = _bucket_counts(dirty, n_cik_buckets)
+    dirty_buckets = sorted(dirty_counts)
+    metrics["n_candidates"] = sum(cand_counts.values())
+    metrics["n_dirty"] = sum(dirty_counts.values())
     _tick("manifest_diff")
 
     # -- 4. patch observations for dirty ciks only ------------------
-    dirty_buckets = dirty.select(
-        cik_bucket_col(F.col("cik"), n_cik_buckets).alias("cik_bucket")
-    ).distinct().localCheckpoint(eager=True)
     if metrics["n_dirty"]:
         facts_d = facts.join(dirty, "cik", "semi")
-        companies_d = companies.join(dirty, "cik", "semi") \
-            .localCheckpoint(eager=True)
+        companies_d = companies.join(dirty, "cik", "semi")
         obs_dirty = build_observations(
             facts_d, companies_d, fy, **pipeline_kw
         ).localCheckpoint(eager=True)
@@ -262,11 +267,11 @@ def run_incremental(
         bucketed = obs_dirty.withColumn(
             "cik_bucket", cik_bucket_col(F.col("cik"), n_cik_buckets)
         )
-        metrics["obs_buckets_rewritten"] = dirty_buckets.count()
+        metrics["obs_buckets_rewritten"] = len(dirty_buckets)
         if _exists(obs_dir):
             kept = (
                 spark.read.parquet(str(obs_dir))
-                .join(dirty_buckets, "cik_bucket", "semi")
+                .where(F.col("cik_bucket").isin(dirty_buckets))
                 .join(dirty, "cik", "left_anti")
                 .select(*bucketed.columns)
             )
@@ -331,11 +336,8 @@ def run_incremental(
     subj_cik = F.regexp_extract("subj", r"(?:CIK|obs-)(\d{10})", 1)
     if metrics["n_dirty"]:
         # snapshot metadata keys partition values as strings (hive dir
-        # names); the dirty-bucket set is <= n_cik_buckets rows, a
-        # bounded driver collect
-        dirty_bucket_set = {
-            str(r["cik_bucket"]) for r in dirty_buckets.collect()
-        }
+        # names)
+        dirty_bucket_set = {str(b) for b in dirty_buckets}
         percik_dirty = company_triples(companies_d).unionByName(
             observation_triples(obs_dirty)
         ).withColumn("family", F.lit("percik")) \

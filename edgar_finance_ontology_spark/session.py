@@ -42,6 +42,20 @@ def build_session(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
+        # Generated classes are a per-process working set: a kg build, a
+        # cold incremental store and two late-page patches compile 711
+        # distinct classes (1,487 loaded, ~3.5 KB bytecode each, ~5 MB
+        # in all), bounded by plan shapes, not by data. Spark's default
+        # 100-entry LRU evicts them all between calls, so every patch
+        # recompiled ~380 classes and ran them un-JITted. 2,000 is ~3x
+        # the measured set, with room for the registry and CQ plans.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # The cache is keyed by source text. With the stage id in the
+        # class name, the same pipeline gets a new key whenever AQE
+        # finishes sibling stages in another order (a run_pipeline
+        # repeated in one session missed 14-22 of ~230 entries); the id
+        # still shows in explain() and in the generated code's comment.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # PySpark 4 captures a Python call-site string (an inspect stack
         # walk + a py4j round trip) on EVERY DataFrame/Column API call to
         # decorate error messages. The engine builds ~50k Column

@@ -302,3 +302,29 @@ def test_observation_triples_udf_nodes(spark):
         F.sum(F.xxhash64(*trip.columns).cast("decimal(38,0)")).alias("h"),
     ).first()
     assert (digest["n"], str(digest["h"])) == OBS_TRIPLES_DIGEST
+
+
+def test_repeated_build_compiles_no_class(spark, panel_inputs):
+    """Generated classes are a per-process working set: a second
+    run_pipeline + triple-table count in the same session reuses every
+    class the first one compiled. The sequence compiles ~215 distinct
+    classes, more than Spark's default 100-entry codegen cache holds,
+    where the second run recompiled ~230."""
+    from edgar_finance_ontology_spark.emit.triples import build_triples
+    from edgar_finance_ontology_spark.plans.pipeline import run_pipeline
+
+    facts, companies = panel_inputs
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def build():
+        t = run_pipeline(facts, companies, 2024)
+        return build_triples(t["observations"], t["companies"],
+                             t["benchmarks"], t["rankings"], 2024).count()
+
+    first = build()
+    before = compiles.getCount()
+    second = build()
+
+    assert second == first > 0
+    assert compiles.getCount() - before == 0
