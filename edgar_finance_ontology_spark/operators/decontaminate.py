@@ -203,8 +203,8 @@ def near_dup_decontaminate(
     # ONE materialized shingle table feeds banding AND the exact-
     # Jaccard verify (it appears 4x in the final plan otherwise — the
     # same re-execution q_minhash_lsh paid before round 6), and the
-    # banding is the fused one-aggregation form (row-identical to
-    # minhash_signatures -> lsh_bands; equality-tested in
+    # banding is the fused one-aggregation form (row-identical to the
+    # unfused minhash_signatures -> lsh_bands reference kept in
     # tests/test_dedup_scale.py).
     sh = word_shingles(
         slim, text_col="_text", n=shingle_n, id_col="_did"

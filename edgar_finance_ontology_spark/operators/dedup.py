@@ -120,50 +120,17 @@ def exact_duplicate_groups(df: DataFrame, text_col: str = "text",
     )
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", n_hashes: int = 16,
-                       shingle_n: int = 3) -> DataFrame:
-    """(id, seed, minhash) — minhash_i = min over shingles of
-    md5(i || '|' || shingle), compared lexicographically (portable)."""
-    sh = word_shingles(df, text_col, shingle_n, id_col)
-    seeds = F.sequence(F.lit(0), F.lit(n_hashes - 1))
-    exploded = sh.select(
-        "id", "shingle", F.explode(seeds).alias("seed")
-    ).withColumn(
-        "h", F.md5(F.concat_ws("|", F.col("seed").cast("string"),
-                               F.col("shingle")))
-    )
-    return exploded.groupBy("id", "seed").agg(F.min("h").alias("minhash"))
-
-
-def lsh_bands(sigs: DataFrame, bands: int = 4) -> DataFrame:
-    """(id, band, bucket): bucket = md5 of the band's concatenated
-    minhashes (seeds sorted within band)."""
-    b = sigs.withColumn("band", F.col("seed") % bands)
-    return (
-        b.groupBy("id", "band")
-        .agg(
-            F.md5(
-                F.concat_ws(
-                    ",", F.sort_array(F.collect_list(
-                        F.concat_ws(":", F.col("seed").cast("string"),
-                                    F.col("minhash"))
-                    ))
-                )
-            ).alias("bucket")
-        )
-    )
-
-
 def minhash_lsh_bands_fused(sh: DataFrame, n_hashes: int = 16,
                             bands: int = 4) -> DataFrame:
-    """(id, band, bucket) — the composition minhash_signatures ->
-    lsh_bands, row-identical (equality-tested in
-    tests/test_dedup_scale.py), in ONE aggregation instead of three
-    shuffles. `sh` is a (id, shingle) frame (word_shingles output —
-    pass it CHECKPOINTED when the caller also feeds it to the
-    exact-Jaccard verify, so the shingler runs once, not once per
-    consumer).
+    """(id, band, bucket): per band, the md5 of the band's sorted
+    "seed:minhash" entries, where minhash_j = min over shingles of
+    md5(j || '|' || shingle), compared lexicographically (portable).
+    Row-identical to the unfused minhash-signatures -> bands
+    composition that tests/test_dedup_scale.py keeps as its reference,
+    in ONE aggregation instead of three shuffles. `sh` is a (id,
+    shingle) frame (word_shingles output — pass it CHECKPOINTED when
+    the caller also feeds it to the exact-Jaccard verify, so the
+    shingler runs once, not once per consumer).
 
     Shape argument (guide §2.3/2.4): the original path exploded
     |shingles| x n_hashes rows carrying 32-char md5 strings through a

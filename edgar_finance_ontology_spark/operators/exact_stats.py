@@ -1,13 +1,13 @@
 """Distributed EXACT group statistics without per-group list
-materialization — the scale path for all-market benchmark scopes.
+materialization — the one route of every benchmark group, industry and
+all-market scope alike.
 
 The reference computes mean/median/index-percentiles with Python
 `statistics` over the sorted value list per group
-(select_xbrl_tags.py:680-713). For industry groups that list is bounded
-by companies-per-industry, but the all-market group is bounded only by
-the total entity count: `collect_list` into one aggregation buffer is a
-memory cliff at web scale. This module computes the same numbers —
-bit-for-bit — with:
+(select_xbrl_tags.py:680-713). A group is bounded only by the entities
+it holds — every entity, for the all-market group — so `collect_list`
+into one aggregation buffer is a memory cliff at web scale. This module
+computes the same numbers — bit-for-bit — with:
 
   * ONE range-partition shuffle of (group, value) sorted within
     partitions (Spark's distributed sort);
@@ -15,7 +15,7 @@ bit-for-bit — with:
     tiny) turned into global rank offsets;
   * a narrow second pass that emits ONLY the rank-targeted rows
     (min / max / median pair / index p25 / p75) plus per-partition
-    exact Fraction partial sums for the mean.
+    exact rational partial sums for the mean.
 
 Python-float parity: statistics.mean is exact-rational (sum of
 Fraction(v) / n -> float, correctly rounded); statistics.median is
@@ -64,9 +64,11 @@ def exact_group_stats(df: DataFrame, group_col: str, value_col: str,
     range-partitioner sampling job + the counts job + the rank-pick
     job; below the cap that is three small-job latencies for work one
     bounded collect covers. Same explicit smaller-than-this-is-local
-    routing as compute_benchmarks' max_list_group and
-    connected_components' driver_cap. Set 0 to force the distributed
-    kernel."""
+    routing as connected_components' driver_cap. Set 0 to force the
+    distributed kernel.
+
+    compute_benchmarks sends both of its scopes through one call, with
+    `industry\\x1fmetric` and `\\x1fmetric` composite group keys."""
     import statistics
 
     d0 = (
@@ -137,42 +139,40 @@ def exact_group_stats(df: DataFrame, group_col: str, value_col: str,
         carried: dict = {}  # rows of each group already seen this task
         for pdf in batches:
             out_g, out_kind, out_rank, out_num, out_den = [], [], [], [], []
-            # global rank per row, vectorized: local cumcount + the
-            # task's per-(pid, group) offset + rows carried from
-            # earlier batches of the same partition
-            grp = pdf.groupby("g", sort=False)
-            local = grp.cumcount().to_numpy() + 1
             pid0 = int(pdf["pid"].iloc[0]) if len(pdf) else 0
-            base = pdf["g"].map(
-                lambda g: off.get((pid0, g), 0) + carried.get(g, 0)
-            ).to_numpy()
-            pos = local + base
-            # rank-targeted rows (tiny selection per group)
-            gvals = pdf["g"].to_numpy()
             vvals = pdf["v"].to_numpy()
-            for g, ranks in want.items():
-                mask = gvals == g
-                if not mask.any():
-                    continue
-                hit = mask & pd.Series(pos).isin(ranks).to_numpy()
-                for p, v in zip(pos[hit], vvals[hit]):
-                    fv = Fraction(float(v))
-                    out_g.append(g)
-                    out_kind.append("rank")
-                    out_rank.append(int(p))
-                    out_num.append(str(fv.numerator))
-                    out_den.append(str(fv.denominator))
-            # exact Fraction partial sums per group (the one place
-            # arbitrary-precision arithmetic is genuinely required —
-            # statistics.mean is exact-rational)
-            for g, vals in grp["v"]:
-                fs = sum(map(Fraction, map(float, vals.to_numpy())))
+            # rows are sorted by (g, v) within the partition, so a
+            # group's rows in this batch hold the consecutive global
+            # ranks start+1 .. start+len(idx); only the groups present
+            # in the batch are visited
+            for g, idx in pdf.groupby("g", sort=False).indices.items():
+                start = off.get((pid0, g), 0) + carried.get(g, 0)
+                carried[g] = carried.get(g, 0) + len(idx)
+                ranks = want.get(g)
+                if ranks is None:
+                    continue  # below min_n: never reported
+                vals = vvals[idx].tolist()
+                for rank in ranks:
+                    if start < rank <= start + len(vals):
+                        num, den = vals[rank - start - 1].as_integer_ratio()
+                        out_g.append(g)
+                        out_kind.append("rank")
+                        out_rank.append(rank)
+                        out_num.append(str(num))
+                        out_den.append(str(den))
+                # exact partial sum (statistics.mean is exact-rational),
+                # as statistics._sum builds it: integer numerators summed
+                # per denominator, then one Fraction per denominator
+                partials: dict = {}
+                for v in vals:
+                    num, den = v.as_integer_ratio()
+                    partials[den] = partials.get(den, 0) + num
+                fs = sum(Fraction(num, den) for den, num in partials.items())
                 out_g.append(g)
                 out_kind.append("sum")
-                out_rank.append(int(len(vals)))
+                out_rank.append(len(vals))
                 out_num.append(str(fs.numerator))
                 out_den.append(str(fs.denominator))
-                carried[g] = carried.get(g, 0) + len(vals)
             yield pd.DataFrame({
                 "g": pd.Series(out_g, dtype="object"),
                 "kind": pd.Series(out_kind, dtype="object"),

@@ -52,13 +52,12 @@ def run_pipeline(
     tol_days: int = 90,
     prefer_unit: str = "USD",
     include_derived: bool = True,
-    max_list_group: int = 100_000,
 ) -> dict:
     """All output tables. Benchmarks/rankings are computed from the
     observations exactly as the reference recomputes them from
-    tags.csv. `max_list_group` routes industry benchmark groups larger
-    than this through the distributed exact-stats path (same numbers,
-    no per-group list buffer) — see operators/benchmarks.py."""
+    tags.csv; every benchmark group, however large, goes through the
+    one exact-stats route (no per-group list buffer) — see
+    operators/benchmarks.py."""
     # materialize + truncate the (possibly expensively derived) inputs:
     # selection scans facts twice (candidate passes / direct-growth
     # mining) and every scan would re-analyze the web-parse plan.
@@ -87,9 +86,7 @@ def run_pipeline(
     from concurrent.futures import ThreadPoolExecutor
 
     def _bench():
-        return compute_benchmarks(
-            obs, fy, max_list_group=max_list_group
-        ).localCheckpoint(eager=True)
+        return compute_benchmarks(obs, fy).localCheckpoint(eager=True)
 
     def _rank():
         return compute_rankings(obs, fy).localCheckpoint(eager=True)

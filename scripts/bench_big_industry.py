@@ -1,15 +1,19 @@
 #!/usr/bin/env python3
-"""Scale evidence for the big-industry benchmark routing (round-2
-verdict item 3): a single 1M-row (industry, metric) group flows through
-compute_benchmarks under the DEFAULT max_list_group=100_000 — so the
-hybrid router takes the exact distributed path on its own, with no
-forced knob — and the output must be bit-equal to the pandas list path
-(max_list_group large enough to keep the group on the list side).
+"""Wall of compute_benchmarks' one exact-statistics route on two
+shapes, each checked against a `statistics`-module oracle:
 
-    python scripts/bench_big_industry.py [--rows 1000000]
+  * mega: ONE industry holding `--rows` ROE values (default 1,000,000);
+  * mid:  300 industries of 1,000 ROE values each.
 
-Prints one JSON line with both walls + the equality verdict; the result
-is recorded in BASELINE.md.
+Both are above exact_group_stats' driver_cap once every row is keyed
+for its industry and for the all-market scope, so the distributed
+kernel runs.
+
+    python scripts/bench_big_industry.py [--rows N] [--threads T]
+
+Prints one JSON line per shape: the wall of each of three calls in one
+session (the first is cold), the warm median, the benchmark row count
+and `oracle_equal`.
 """
 
 from __future__ import annotations
@@ -17,50 +21,64 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def synth_obs(spark, rows: int):
-    """Observation-shaped frame: ONE mega industry holding `rows` ROE
-    values (deterministic, irregular enough to exercise tie handling)
-    plus a handful of ordinary small industries."""
+def _value(i: int) -> float:
+    """Row i's ROE: exact integer arithmetic and one IEEE division, so
+    the JVM and CPython compute the identical double."""
+    return float(i * 2654435761 % 1000003) / 1000.0 - 500.0
+
+
+def synth_obs(spark, n_rows: int, n_industries: int):
+    """Observation-shaped frame: `n_rows` ROE values spread round-robin
+    over `n_industries` industries of one sector."""
     from pyspark.sql import functions as F
 
-    mega = spark.range(rows).select(
+    ind = (F.lit("Mega Industry") if n_industries == 1 else
+           F.concat(F.lit("Ind"), (F.col("id") % n_industries).cast("string")))
+    return spark.range(n_rows).select(
         F.format_string("%010d", F.col("id")).alias("cik"),
         F.concat(F.lit("T"), F.col("id").cast("string")).alias("symbol"),
         F.concat(F.lit("Co"), F.col("id").cast("string")).alias("name"),
         F.lit("Tech").alias("sector"),
-        F.lit("Mega Industry").alias("industry"),
+        ind.alias("industry"),
         F.lit(2024).alias("fy"),
         F.lit("ROE").alias("metric"),
         F.lit(False).alias("is_derived"),
-        (((F.col("id") * 2654435761) % 1000003).cast("double") / 1000.0
+        ((F.col("id") * 2654435761 % 1000003).cast("double") / 1000.0
          - 500.0).alias("value"),
     )
-    small = spark.range(600).select(
-        F.format_string("9%09d", F.col("id")).alias("cik"),
-        F.concat(F.lit("S"), F.col("id").cast("string")).alias("symbol"),
-        F.concat(F.lit("Sm"), F.col("id").cast("string")).alias("name"),
-        F.lit("Fin").alias("sector"),
-        F.concat(F.lit("Ind"), (F.col("id") % 50).cast("string")).alias(
-            "industry"),
-        F.lit(2024).alias("fy"),
-        F.lit("NetProfitMargin").alias("metric"),
-        F.lit(False).alias("is_derived"),
-        ((F.col("id") % 997).cast("double") / 100.0).alias("value"),
-    )
-    return mega.unionByName(small)
+
+
+def oracle_rows(n_rows: int, n_industries: int) -> list[tuple]:
+    """The reference arithmetic over the CSV-rounded values, per
+    industry and for the all-market scope."""
+    groups: dict = {}
+    for i in range(n_rows):
+        ind = ("Mega Industry" if n_industries == 1
+               else f"Ind{i % n_industries}")
+        v = float(f"{_value(i):.6f}")
+        groups.setdefault((ind, "Tech"), []).append(v)
+        groups.setdefault(("", ""), []).append(v)
+    out = []
+    for (ind, sec), vals in groups.items():
+        vs = sorted(vals)
+        n = len(vs)
+        out.append((ind, sec, "ROE", 2024, statistics.mean(vs),
+                    statistics.median(vs), vs[-1], vs[0],
+                    vs[int(n * 0.25)], vs[int(n * 0.75)], n))
+    return sorted(out)
 
 
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=1_000_000)
-    ap.add_argument("--threads", type=int, default=int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--threads", type=int, default=2)
     args = ap.parse_args()
 
     from edgar_finance_ontology_spark.operators.benchmarks import (
@@ -70,32 +88,27 @@ def main():
 
     spark = build_session(
         "efin-big-industry", master=f"local[{args.threads}]",
-        shuffle_partitions=max(8, args.threads),
-        extra_conf={"spark.driver.memory": "24g"},
+        shuffle_partitions=max(4, args.threads),
     )
-    obs = synth_obs(spark, args.rows).localCheckpoint(eager=True)
-
-    t0 = time.monotonic()
-    exact = compute_benchmarks(obs, 2024)  # default 100k cap -> big path
-    rows_exact = sorted(map(tuple, exact.collect()))
-    wall_exact = time.monotonic() - t0
-
-    t1 = time.monotonic()
-    listp = compute_benchmarks(obs, 2024, max_list_group=args.rows * 2)
-    rows_list = sorted(map(tuple, listp.collect()))
-    wall_list = time.monotonic() - t1
-
-    out = {
-        "rows_mega_group": args.rows,
-        "threads": args.threads,
-        "wall_exact_path_sec": round(wall_exact, 3),
-        "wall_list_path_sec": round(wall_list, 3),
-        "bench_rows": len(rows_exact),
-        "bit_equal": rows_exact == rows_list,
-    }
-    print(json.dumps(out))
-    assert out["bit_equal"], "exact path diverged from list path"
+    ok = True
+    for name, n_rows, n_ind in (("mega", args.rows, 1),
+                                ("mid", 300 * 1_000, 300)):
+        obs = synth_obs(spark, n_rows, n_ind).localCheckpoint(eager=True)
+        walls = []
+        for _ in range(3):
+            t0 = time.monotonic()
+            rows = sorted(map(tuple, compute_benchmarks(obs, 2024).collect()))
+            walls.append(round(time.monotonic() - t0, 3))
+        equal = rows == oracle_rows(n_rows, n_ind)
+        ok &= equal
+        print(json.dumps({
+            "shape": name, "rows": n_rows, "industries": n_ind,
+            "threads": args.threads, "wall_sec": walls,
+            "warm_median_sec": statistics.median(walls[1:]),
+            "bench_rows": len(rows), "oracle_equal": equal,
+        }), flush=True)
     spark.stop()
+    assert ok, "compute_benchmarks diverged from the statistics oracle"
 
 
 if __name__ == "__main__":

@@ -23,13 +23,51 @@ def boiler_docs(spark):
     return spark.createDataFrame(rows, "doc_id string, text string").cache()
 
 
-def test_lsh_bucket_cap_bounds_candidates(boiler_docs):
-    from edgar_finance_ontology_spark.operators.dedup import (
-        lsh_bands, lsh_candidate_pairs, minhash_signatures,
+def minhash_signatures(df, text_col="text", id_col="doc_id", n_hashes=16,
+                       shingle_n=3):
+    """(id, seed, minhash) — minhash_i = min over shingles of
+    md5(i || '|' || shingle), compared lexicographically (portable).
+    With lsh_bands, the unfused reference banding that
+    minhash_lsh_bands_fused must reproduce row for row."""
+    from edgar_finance_ontology_spark.operators.dedup import word_shingles
+
+    sh = word_shingles(df, text_col, shingle_n, id_col)
+    seeds = F.sequence(F.lit(0), F.lit(n_hashes - 1))
+    exploded = sh.select(
+        "id", "shingle", F.explode(seeds).alias("seed")
+    ).withColumn(
+        "h", F.md5(F.concat_ws("|", F.col("seed").cast("string"),
+                               F.col("shingle")))
+    )
+    return exploded.groupBy("id", "seed").agg(F.min("h").alias("minhash"))
+
+
+def lsh_bands(sigs, bands=4):
+    """(id, band, bucket): bucket = md5 of the band's concatenated
+    minhashes (seeds sorted within band)."""
+    b = sigs.withColumn("band", F.col("seed") % bands)
+    return (
+        b.groupBy("id", "band")
+        .agg(
+            F.md5(
+                F.concat_ws(
+                    ",", F.sort_array(F.collect_list(
+                        F.concat_ws(":", F.col("seed").cast("string"),
+                                    F.col("minhash"))
+                    ))
+                )
+            ).alias("bucket")
+        )
     )
 
-    sigs = minhash_signatures(boiler_docs, n_hashes=8)
-    bands = lsh_bands(sigs, bands=4)
+
+def test_lsh_bucket_cap_bounds_candidates(boiler_docs):
+    from edgar_finance_ontology_spark.operators.dedup import (
+        lsh_candidate_pairs, minhash_lsh_bands_fused, word_shingles,
+    )
+
+    bands = minhash_lsh_bands_fused(word_shingles(boiler_docs), n_hashes=8,
+                                    bands=4)
     uncapped = lsh_candidate_pairs(bands).count()
     capped = lsh_candidate_pairs(bands, max_bucket=50)
     n_capped = capped.count()
@@ -242,8 +280,7 @@ def test_minhash_lsh_bands_fused_matches_original(spark, boiler_docs):
     and multi-digit seeds where the sort is lexicographic on the
     'seed:minhash' string in both forms."""
     from edgar_finance_ontology_spark.operators.dedup import (
-        lsh_bands, minhash_lsh_bands_fused, minhash_signatures,
-        word_shingles,
+        minhash_lsh_bands_fused, word_shingles,
     )
 
     edge = spark.createDataFrame(

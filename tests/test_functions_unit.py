@@ -142,20 +142,26 @@ def test_score_adj_table(spark):
 
 
 def test_index_percentile_matches_python(spark):
-    """A1b: benchmarks' sorted[int(n*q)] percentile semantics."""
+    """A1b: benchmarks' sorted[int(n*q)] percentile semantics, on the
+    driver route and on the distributed kernel (driver_cap=0)."""
     import statistics
 
-    from edgar_finance_ontology_spark.operators.benchmarks import _group_stats
+    from edgar_finance_ontology_spark.operators.exact_stats import (
+        exact_group_stats,
+    )
 
     vals = [3.5, 1.25, 9.0, 2.0, 7.75, 4.0, 6.5]
-    df = spark.createDataFrame([(vals,)], "vals array<double>")
-    row = df.select(_group_stats(F.col("vals")).alias("s")).collect()[0]["s"]
+    df = spark.createDataFrame([("g", v) for v in vals], "k string, v double")
     sv = sorted(vals)
     n = len(sv)
-    assert row["percentile25"] == sv[int(n * 0.25)]
-    assert row["percentile75"] == sv[int(n * 0.75)]
-    assert row["median_value"] == statistics.median(vals)
-    assert row["average_value"] == statistics.mean(vals)
+    for route in ({}, {"driver_cap": 0}):
+        (row,) = exact_group_stats(
+            df, "k", "v", min_n=2, **route).to_dict("records")
+        assert row["p25"] == sv[int(n * 0.25)], route
+        assert row["p75"] == sv[int(n * 0.75)], route
+        assert row["median"] == statistics.median(vals), route
+        assert row["average"] == statistics.mean(vals), route
+        assert (row["min"], row["max"], row["n"]) == (sv[0], sv[-1], n)
 
 
 def test_py_float_repr(spark):

@@ -7,8 +7,8 @@ that adds a stray action or an unfused selection pass shows up here as
 extra jobs. The budget is the measured count (14 jobs on the 12-company
 panel, local[4], 4 shuffle partitions) plus 2 for AQE, which can plan
 one job more or less between builds. The same rule sets the budget of
-the aggregates (benchmarks + rankings) checkpoints and of the Turtle
-write.
+the benchmarks checkpoint, of the aggregates (benchmarks + rankings)
+checkpoints, of the Turtle write and of a one-page incremental patch.
 
 Python UDF stages are guarded by their `ArrowEvalPython` node count:
 at small scale each Python task pays a fixed start of a tenth of a
@@ -24,11 +24,24 @@ import pytest
 
 OBS_JOBS_MEASURED = 14
 OBS_JOB_BUDGET = OBS_JOBS_MEASURED + 2
+# a lone compute_benchmarks checkpoint on the same panel: the rounded-
+# row checkpoint, the sector lookup, the exact-stats collect and the
+# checkpoint itself; routing industry groups through a pandas list UDF
+# as well measured 11
+BENCH_JOBS_MEASURED = 5
+BENCH_JOB_BUDGET = BENCH_JOBS_MEASURED + 2
 # concurrent compute_benchmarks + compute_rankings checkpoints on the
 # same panel; 24 before rankings became one pass and benchmarks read
-# one checkpoint of its rounded rows
-AGG_JOBS_MEASURED = 13
+# one checkpoint of its rounded rows, 13 before benchmarks became one
+# exact-stats route
+AGG_JOBS_MEASURED = 7
 AGG_JOB_BUDGET = AGG_JOBS_MEASURED + 2
+# run_incremental patching one late page into a cold store of the
+# 12-company page panel (8 url buckets), every job of the call; 81
+# while benchmarks still routed small industry groups through a pandas
+# list UDF
+INC_JOBS_MEASURED = 76
+INC_JOB_BUDGET = INC_JOBS_MEASURED + 2
 # write_turtle_document on the same panel, from checkpointed tables:
 # one range-sorted text write (a hash exchange, the sort's sampling job
 # and shuffle) plus the canonical-key and dimension aggregations; the
@@ -112,6 +125,54 @@ def test_aggregates_job_budget(spark, panel_inputs):
 
     assert bench.count() > 0 and rank.count() > 0
     assert 0 < len(jobs) <= AGG_JOB_BUDGET, sorted(jobs)
+
+
+def test_benchmarks_job_budget(spark, panel_inputs):
+    from edgar_finance_ontology_spark.operators.benchmarks import (
+        compute_benchmarks,
+    )
+    from edgar_finance_ontology_spark.operators.observations import (
+        build_observations,
+    )
+
+    facts, companies = panel_inputs
+    obs = build_observations(facts, companies, 2024).localCheckpoint(
+        eager=True)
+    (bench,), jobs = _jobs_of(
+        spark.sparkContext, "job-budget:benchmarks",
+        lambda: compute_benchmarks(obs, 2024).localCheckpoint(eager=True))
+
+    assert bench.count() > 0
+    assert 0 < len(jobs) <= BENCH_JOB_BUDGET, sorted(jobs)
+
+
+def test_incremental_patch_job_budget(spark, tmp_path):
+    """One late page patched into a cold-built store. run_incremental
+    starts jobs from its own pool threads, which carry no job group, so
+    the count is the group's jobs plus the ungrouped jobs that appeared
+    during the call (nothing else runs meanwhile)."""
+    from test_incremental import _late_page_row, _pages
+
+    from edgar_finance_ontology_spark.plans.incremental import (
+        run_incremental,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = str(tmp_path / "store")
+    pages = _pages(spark)
+    cold = run_incremental(spark, pages, 2024, store)
+    _, late = _late_page_row(spark, cold["observations"])
+    late_pages = pages.unionByName(late)
+
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    (patch,), grouped = _jobs_of(
+        sc, "job-budget:incremental",
+        lambda: run_incremental(spark, late_pages, 2024, store))
+    jobs = set(grouped) | (set(tracker.getJobIdsForGroup(None)) - ungrouped)
+
+    assert patch["metrics"]["n_dirty"] == 1
+    assert 0 < len(jobs) <= INC_JOB_BUDGET, len(jobs)
 
 
 @pytest.fixture(scope="module")
