@@ -151,157 +151,142 @@ def kmeans_fit(embeddings: DataFrame, k: int = 8, iters: int = 3,
                id_col: str = "vec_id",
                vec_col: str = "embedding",
                seed_sample: int = 2048) -> list[list[float]]:
-    """Deterministic distributed Lloyd's iterations — the REAL coarse
-    quantizer for the IVF family (cell ids trained from the data, not
-    a stand-in label column). Returns the k centroids as plain Python
-    lists (the MODEL — k×dim driver floats, not data).
-
-    Determinism contract (what makes the DuckDB twin replayable and
-    re-runs reproducible regardless of partitioning):
-      * init = deterministic FARTHEST-FIRST traversal over a
-        HASH-ORDER sample: the `seed_sample` vectors with the lowest
-        (md5(id), id) key (ONE TakeOrdered job collects the bounded
-        sample; the k-seed traversal then runs driver-side in plain
-        Python — the sequential-fold arithmetic is bit-identical to
-        the Spark/DuckDB folds, verified, so the choice is
-        engine-replayable). md5 renders the same hex in Spark and
-        DuckDB, so the twin replays the selection exactly; ordering
-        by a hash makes the sample uniform over the id space rather
-        than a prefix (a prefix sample sees only whatever ids sort
-        first — at 10^12 rows that is one crawl slice, not the
-        corpus). Seed 0 is the lowest-hash vector, seed j maximizes
-        the distance to its nearest already-chosen seed (ties to the
-        lowest sample position). Naive "k lowest ids" seeding put
-        adjacent seeds inside one cluster and Lloyd's stabilized on a
-        degenerate mid-point split (caught by the two-blob test);
-      * assignment = sequential-fold squared distance, ties to the
-        lowest cell id;
-      * update = per-dimension EXACT DECIMAL(38,15) sums (decimal
-        addition is associative — row order cannot change the result,
-        unlike double sums) converted to double means;
-      * an emptied cluster keeps its previous centroid.
-
-    100-TB posture: each iteration is ONE map-side-combined
-    aggregation; the k×(dim+1) result rows come to the driver (the
-    model update is inherently driver-side and tiny). At 10^12 rows
-    you fit on a hash-sampled subset (stratified_sample) and assign
-    everywhere — same code path, the fit input is just smaller."""
-    e = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).where(F.col("v").isNotNull() & (F.size("v") > 0))
-    sample = [
-        list(r["v"])
-        for r in e.orderBy(F.md5(F.col("id").cast("string")), "id")
-        .limit(seed_sample).collect()
-    ]
-    if not sample:
-        raise ValueError(
-            "kmeans_fit: no non-empty vectors in input "
-            f"(id_col={id_col!r}, vec_col={vec_col!r})"
-        )
-    expected_dim = len(sample[0])
-    sample = [v for v in sample if len(v) == expected_dim]
-
-    cents = _seed_traversal(sample, k)
-    dim = len(cents[0])
-    # rows whose vector length disagrees with the centroid dim would
-    # yield NULL distance cells and blow up the update indexing —
-    # exclude them from the fit (the caller's data problem, not ours)
-    fit = e.where(F.size("v") == dim)
-    for _ in range(iters):
-        cell = cell_assign_col(F.col("v"), cents)
-        # ONE (cell, dim) aggregation via posexplode instead of dim
-        # separate sum expressions: the per-iteration work is identical
-        # (the same decimal addends reach the same per-(cell,dim) sums,
-        # and decimal addition is associative, so means are bit-equal —
-        # kmeans tests + the replaying twins pin this), but the plan
-        # carries ONE aggregate instead of 64, which was ~1.5s of
-        # analysis/codegen per iteration at dim=64. k×dim result rows
-        # to the driver either way.
-        rows = (
-            fit.select(cell.alias("cell"), "v")
-            .select("cell", F.posexplode("v").alias("d", "x"))
-            .groupBy("cell", "d")
-            .agg(F.count("*").alias("n"),
-                 F.sum(F.col("x").cast("decimal(38,15)")).alias("s"))
-            .collect()
-        )
-        new = [list(c) for c in cents]
-        for r in rows:
-            if r["cell"] is None:
-                continue
-            new[r["cell"]][r["d"]] = float(r["s"]) / r["n"]
-        cents = new
-    return cents
+    """Deterministic distributed Lloyd's iterations over the whole
+    vector — the REAL coarse quantizer for the IVF family (cell ids
+    trained from the data, not a stand-in label column). Returns the
+    k centroids as plain Python lists (the MODEL — k×dim driver
+    floats, not data). The one-space call of kmeans_fit_multi, which
+    documents the determinism contract."""
+    return kmeans_fit_multi(
+        embeddings, [(1, None)], k=k, iters=iters, id_col=id_col,
+        vec_col=vec_col, seed_sample=seed_sample,
+    )[0]
 
 
 def kmeans_fit_multi(
     embeddings: DataFrame,
-    spaces: list[tuple[int, int]],
-    k: int = 8,
+    spaces: list[tuple[int, int | None]],
+    k: int | list[int] = 8,
     iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed_sample: int = 2048,
-) -> list[list[list[float]]] | None:
-    """Fused multi-subspace Lloyd fit: one codebook per (start, dim)
-    1-based contiguous slice of the vector, ALL spaces trained in the
-    same Spark jobs — ONE TakeOrdered sample collect (shared, sliced
-    driver-side) and ONE map-side-combined aggregation per iteration
-    keyed by (space, cell, d), instead of |spaces| independent
-    kmeans_fit calls each paying its own sample job and per-iteration
-    jobs (guide §1.2: remove redundant passes; an IVFADC fit ran 3
-    sample jobs + 6 iteration jobs for work one job sequence covers).
+) -> list[list[list[float]]]:
+    """Deterministic distributed Lloyd fit of one codebook per space.
+    A space (start, dim) is the 1-based contiguous slice
+    F.slice(v, start, dim) of each vector; dim=None runs to the end of
+    the vector, so (1, None) is the whole vector. `k` is one centroid
+    count for every space or a list with one per space. All spaces
+    train in the same Spark jobs: ONE TakeOrdered sample collect
+    (shared, sliced driver-side) and ONE map-side-combined aggregation
+    per iteration keyed by (space, cell, d), so an IVFADC fit (coarse
+    + 2 subspaces) runs 1 + iters actions, not 3 × (1 + iters).
 
-    Bit-equality with the per-space kmeans_fit calls it replaces
-    (pinned by tests/test_kmeans_multi.py): the per-(space, cell, d)
-    decimal sums are unchanged (decimal addition is associative, and
-    tagging rows with a space id does not change which addends reach
-    which group), the seed traversal runs on the identical sliced
-    sample, and each space keeps its own size-== guard.
+    Per space the fit is exactly a one-space fit run on the sliced
+    vectors (tests/test_kmeans_multi.py keeps that per-space fit as
+    the reference and checks bit-equality on uniform, ragged and
+    out-of-range inputs):
+      * input = the rows whose slice is non-null and non-empty, i.e.
+        size(v) >= start. The shared sample holds the `seed_sample`
+        lowest-(md5(id), id) non-empty vectors; a space whose rows
+        that sample cannot cover (the sample is full and holds a row
+        shorter than `start`) gets its own bounded collect of the
+        `seed_sample` lowest rows with size(v) >= start. Uniform
+        input never needs one;
+      * the space's dim = the length of its first sampled slice;
+        sampled slices of another length are dropped before seeding,
+        and the fit keeps only rows whose slice has that length (a
+        ragged row is the caller's data problem: it would yield NULL
+        distance cells and break the update indexing);
+      * a space with no non-empty slice raises ValueError.
 
-    Returns None when the fast path cannot PROVE sample equivalence —
-    the collected sample contains ragged vectors, so the per-space
-    sample membership (which filters on the SLICED length before the
-    limit) could differ from a shared full-vector sample. Callers fall
-    back to per-space kmeans_fit; on real corpora (uniform dim) the
-    fast path always engages."""
+    Determinism contract (what makes the DuckDB twins replayable and
+    re-runs reproducible regardless of partitioning):
+      * init = deterministic FARTHEST-FIRST traversal over the
+        HASH-ORDER sample, run driver-side (_seed_traversal; its
+        sequential-fold arithmetic is bit-identical to the Spark/DuckDB
+        folds, verified, so the choice is engine-replayable). md5
+        renders the same hex in Spark and DuckDB, so the twin replays
+        the selection exactly; ordering by a hash makes the sample
+        uniform over the id space rather than a prefix (a prefix
+        sample sees only whatever ids sort first — at 10^12 rows that
+        is one crawl slice, not the corpus). Seed 0 is the lowest-hash
+        vector, seed j maximizes the distance to its nearest
+        already-chosen seed (ties to the lowest sample position).
+        Naive "k lowest ids" seeding put adjacent seeds inside one
+        cluster and Lloyd's stabilized on a degenerate mid-point split
+        (caught by the two-blob test);
+      * assignment = sequential-fold squared distance, ties to the
+        lowest cell id;
+      * update = per-dimension EXACT DECIMAL(38,15) sums (decimal
+        addition is associative — row order, and tagging rows with a
+        space id, cannot change the result, unlike double sums)
+        converted to double means;
+      * an emptied cluster keeps its previous centroid.
+
+    100-TB posture: the (space, cell, d) result rows come to the
+    driver (the model update is inherently driver-side and tiny). At
+    10^12 rows you fit on a hash-sampled subset (stratified_sample)
+    and assign everywhere — same code path, the fit input is just
+    smaller."""
+    if any(start < 1 or (dim is not None and dim < 1)
+           for start, dim in spaces):
+        raise ValueError(
+            f"kmeans_fit_multi: every space needs start >= 1 and "
+            f"dim >= 1 or None, got {spaces!r}"
+        )
+    ks = [k] * len(spaces) if isinstance(k, int) else list(k)
     e = embeddings.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     ).where(F.col("v").isNotNull() & (F.size("v") > 0))
-    sample_rows = [
-        list(r["v"])
-        for r in e.orderBy(F.md5(F.col("id").cast("string")), "id")
-        .limit(seed_sample).collect()
-    ]
-    if not sample_rows:
-        raise ValueError("kmeans_fit_multi: no non-empty vectors in input")
-    full_dim = len(sample_rows[0])
-    if any(len(v) != full_dim for v in sample_rows):
-        return None  # ragged sample -> caller uses per-space fits
-    if any(start + dim - 1 > full_dim or start < 1 or dim < 1
-           for start, dim in spaces):
-        return None
-    cents_by_space: list[list[list[float]]] = []
-    for start, dim in spaces:
-        sliced = [v[start - 1:start - 1 + dim] for v in sample_rows]
-        cents_by_space.append(_seed_traversal(sliced, k))
+
+    def take(frame):
+        return [
+            list(r["v"])
+            for r in frame.orderBy(F.md5(F.col("id").cast("string")), "id")
+            .limit(seed_sample).collect()
+        ]
+
+    shared = take(e)
+    samples: dict[int, list[list[float]]] = {}
+    dims, cents_by_space = [], []
+    for (start, dim), kk in zip(spaces, ks, strict=True):
+        if start not in samples:
+            if len(shared) == seed_sample and any(
+                    len(v) < start for v in shared):
+                samples[start] = take(e.where(F.size("v") >= start))
+            else:
+                samples[start] = [v for v in shared if len(v) >= start]
+        end = None if dim is None else start - 1 + dim
+        sliced = [v[start - 1:end] for v in samples[start]]
+        if not sliced:
+            raise ValueError(
+                f"kmeans_fit_multi: no non-empty vectors in input for "
+                f"space ({start}, {dim}) "
+                f"(id_col={id_col!r}, vec_col={vec_col!r})"
+            )
+        dims.append(len(sliced[0]))
+        cents_by_space.append(_seed_traversal(
+            [s for s in sliced if len(s) == dims[-1]], kk))
+    svs = [F.slice("v", start, F.size("v") if dim is None else dim)
+           for start, dim in spaces]
     for _ in range(iters):
         parts = []
-        for s, ((start, dim), cents) in enumerate(
-                zip(spaces, cents_by_space)):
-            sv = F.slice(F.col("v"), start, dim)
-            fit = e.where(F.size(sv) == dim)
+        for s, (sv, sdim, cents) in enumerate(
+                zip(svs, dims, cents_by_space)):
             cell = cell_assign_col(sv, cents)
-            # TWO selects, like kmeans_fit: the O(k*dim) assignment
-            # must land in its own Project so it is computed once per
-            # SOURCE row — fused into the posexplode select it would
-            # re-evaluate per exploded row (dim x the work; measured
-            # 6x slower end-to-end)
-            staged = fit.select(F.lit(s).alias("space"),
-                                cell.alias("cell"), sv.alias("sv"))
+            # TWO selects: the O(k*dim) assignment must land in its own
+            # Project so it is computed once per SOURCE row — fused
+            # into the posexplode select it would re-evaluate per
+            # exploded row (dim x the work; measured 6x slower
+            # end-to-end). One (cell, d) aggregation via posexplode
+            # instead of dim separate sum expressions: the plan carries
+            # ONE aggregate instead of 64, which was ~1.5s of
+            # analysis/codegen per iteration at dim=64
+            staged = e.where(F.size(sv) == sdim).select(
+                F.lit(s).alias("space"), cell.alias("cell"),
+                sv.alias("sv"))
             parts.append(
                 staged.select("space", "cell",
                               F.posexplode("sv").alias("d", "x"))
@@ -713,16 +698,11 @@ def cluster_balanced_sample(
 # ---------------------------------------------------------------------
 
 
-def pq_fit(embeddings: DataFrame, m: int = 2, k: int = 8,
-           iters: int = 3, id_col: str = "vec_id",
-           vec_col: str = "embedding", seed_sample: int = 2048,
-           dim: int | None = None) -> list[list[list[float]]]:
-    """Per-subspace codebooks: `dim` splits into m equal contiguous
-    slices, one kmeans_fit per slice (each fit inherits the full
-    determinism contract — hash-order seeds, decimal updates — so the
-    codebooks are partition-invariant and twin-replayable). Returns
-    m codebooks of k centroids each. `dim` is inferred as the minimum
-    non-empty vector length when not given (one bounded agg)."""
+def _pq_spaces(embeddings: DataFrame, m: int, vec_col: str,
+               dim: int | None) -> list[tuple[int, int]]:
+    """The m equal contiguous (start, dim) subspaces of `dim`, which
+    is inferred as the minimum non-empty vector length when not given
+    (one bounded agg)."""
     if dim is None:
         row = embeddings.where(
             F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)
@@ -733,27 +713,23 @@ def pq_fit(embeddings: DataFrame, m: int = 2, k: int = 8,
             f"pq_fit: dim={dim} must be positive and divisible by m={m}"
         )
     sub = dim // m
-    # fused fast path: all m subspace fits share one sample collect and
-    # one aggregation job per iteration (falls back to the per-space
-    # fits below — bit-identical, just more jobs — on ragged samples)
-    multi = kmeans_fit_multi(
-        embeddings, [(j * sub + 1, sub) for j in range(m)],
+    return [(j * sub + 1, sub) for j in range(m)]
+
+
+def pq_fit(embeddings: DataFrame, m: int = 2, k: int = 8,
+           iters: int = 3, id_col: str = "vec_id",
+           vec_col: str = "embedding", seed_sample: int = 2048,
+           dim: int | None = None) -> list[list[list[float]]]:
+    """Per-subspace codebooks: `dim` splits into m equal contiguous
+    slices (_pq_spaces), all fit by one kmeans_fit_multi call (each
+    codebook inherits the full determinism contract — hash-order
+    seeds, decimal updates — so the codebooks are partition-invariant
+    and twin-replayable). Returns m codebooks of k centroids each."""
+    return kmeans_fit_multi(
+        embeddings, _pq_spaces(embeddings, m, vec_col, dim),
         k=k, iters=iters, id_col=id_col, vec_col=vec_col,
         seed_sample=seed_sample,
     )
-    if multi is not None:
-        return multi
-    return [
-        kmeans_fit(
-            embeddings.select(
-                F.col(id_col),
-                F.slice(vec_col, j * sub + 1, sub).alias(vec_col),
-            ),
-            k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-            seed_sample=seed_sample,
-        )
-        for j in range(m)
-    ]
 
 
 def pq_codes_col(vec, codebooks: list[list[list[float]]]):
@@ -981,10 +957,11 @@ def measure_pq_recall(
     (cell restriction AND code quantization; nprobe=kmeans_k isolates
     the pure PQ quantization loss). Same driver-light contract as
     measure_ivf_recall: only the top-k result sets are collected."""
-    coarse = kmeans_fit(embeddings, k=kmeans_k, iters=kmeans_iters,
-                        id_col=id_col, vec_col=vec_col)
-    cbs = pq_fit(embeddings, m=m, k=pq_k, iters=kmeans_iters,
-                 id_col=id_col, vec_col=vec_col, dim=dim)
+    coarse, *cbs = kmeans_fit_multi(
+        embeddings, [(1, None)] + _pq_spaces(embeddings, m, vec_col, dim),
+        k=[kmeans_k] + [pq_k] * m, iters=kmeans_iters,
+        id_col=id_col, vec_col=vec_col,
+    )
     q = embeddings.orderBy(id_col).limit(n_queries)
     exact = brute_force_l2_topk(embeddings, q, k=k, id_col=id_col,
                                 vec_col=vec_col)

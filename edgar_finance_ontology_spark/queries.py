@@ -867,8 +867,8 @@ SQL_ANN_IVF_MULTIPROBE = _sql_ivf_multiprobe()
 
 def q_ann_pq_adc(spark, sf):
     """Product-quantization ADC search (Jégou et al. 2011): two
-    32-dim subspace codebooks (k=8 each, the deterministic kmeans_fit
-    per subspace), corpus compressed to 2 codes/vector, the 10
+    32-dim subspace codebooks (k=8 each, one deterministic
+    kmeans_fit_multi fit), corpus compressed to 2 codes/vector, the 10
     lowest-vec_id queries scored by per-query lookup tables — top-3
     by asymmetric distance."""
     from .operators.similarity import pq_adc_topk, pq_fit
@@ -941,22 +941,14 @@ def q_ann_ivfadc(spark, sf):
     10 lowest-vec_id queries to its 2 nearest cells; survivors score
     by the PQ lookup tables (m=2, k=8 per subspace) — top-3 by
     asymmetric distance."""
-    from .operators.similarity import (
-        ann_ivfadc_topk, kmeans_fit, kmeans_fit_multi, pq_fit,
-    )
+    from .operators.similarity import ann_ivfadc_topk, kmeans_fit_multi
 
     e = _t(spark, sf, "embeddings")
-    # fused fit: coarse (full-dim) + both PQ subspaces share one
-    # sample collect and one aggregation job per Lloyd iteration —
-    # bit-identical to the three independent fits (which remain the
-    # fallback for ragged vectors)
-    multi = kmeans_fit_multi(e, [(1, 64), (1, 32), (33, 32)],
-                             k=8, iters=2)
-    if multi is not None:
-        coarse, cbs = multi[0], multi[1:]
-    else:
-        coarse = kmeans_fit(e, k=8, iters=2)
-        cbs = pq_fit(e, m=2, k=8, iters=2, dim=64)
+    # one fused fit: the whole-vector coarse quantizer and both PQ
+    # subspaces share one sample collect and one aggregation job per
+    # Lloyd iteration
+    coarse, *cbs = kmeans_fit_multi(e, [(1, None), (1, 32), (33, 32)],
+                                    k=8, iters=2)
     q = e.orderBy("vec_id").limit(10)
     return ann_ivfadc_topk(e, q, coarse, cbs, nprobe=2, topk=3) \
         .orderBy("query_id", "rank")

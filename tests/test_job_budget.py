@@ -9,6 +9,7 @@ panel, local[4], 4 shuffle partitions) plus 2 for AQE, which can plan
 one job more or less between builds. The same rule sets the budget of
 the benchmarks checkpoint, of the aggregates (benchmarks + rankings)
 checkpoints, of the Turtle write and of a one-page incremental patch.
+The fused k-means fit's job count is pinned exactly.
 
 Python UDF stages are guarded by their `ArrowEvalPython` node count:
 at small scale each Python task pays a fixed start of a tenth of a
@@ -389,3 +390,37 @@ def test_repeated_build_compiles_no_class(spark, panel_inputs):
 
     assert second == first > 0
     assert compiles.getCount() - before == 0
+
+
+def test_kmeans_fit_multi_job_count(spark):
+    """The fused k-means fit is one sample collect plus one aggregation
+    per Lloyd iteration, which AQE runs as two jobs (the shuffle map
+    stage, then the collect) — for one space and for three alike. A
+    space whose rows the shared sample cannot cover (the sample is full
+    and holds a row shorter than the space's start) adds one bounded
+    collect; uniform vectors never need it."""
+    import random
+
+    from edgar_finance_ontology_spark.operators.similarity import (
+        kmeans_fit_multi,
+    )
+    from test_kmeans_multi import SCHEMA, top_up_frame
+
+    rng = random.Random(1)
+    uniform = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(200)],
+        SCHEMA)
+    iters = 2
+
+    def jobs(name, df, spaces):
+        _, ids = _jobs_of(
+            spark.sparkContext, f"job-budget:kmeans-{name}",
+            lambda: kmeans_fit_multi(df, spaces, k=3, iters=iters,
+                                     seed_sample=10))
+        return len(ids)
+
+    assert jobs("one", uniform, [(1, None)]) == 1 + 2 * iters
+    assert jobs("three", uniform, [(1, None), (1, 4), (5, 4)]) \
+        == 1 + 2 * iters
+    assert jobs("top-up", top_up_frame(spark), [(1, 4), (5, 4)]) \
+        == 2 + 2 * iters

@@ -3,6 +3,7 @@ kmeans_fit / cell_assign_col / ann_ivf_multiprobe)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from edgar_finance_ontology_spark.operators.similarity import (
@@ -153,11 +154,14 @@ def test_ivf_index_lifecycle(spark, tmp_path):
     assert got2[0]["cell"] == 0
 
 
-def test_ivf_twin_parity_on_dirty_embeddings(spark, tmp_path):
+@pytest.mark.parametrize(
+    "name", ["ann_ivf_multiprobe", "ann_pq_adc", "ann_ivfadc"])
+def test_ivf_twin_parity_on_dirty_embeddings(spark, tmp_path, name):
     """Engine-parity of the kmeans guards themselves: an embeddings
     table carrying NULL, empty, and ragged vectors must produce the
-    IDENTICAL multiprobe result in Spark and in the DuckDB twin (the
-    twin's basef/smpf/fitb filters mirror kmeans_fit's)."""
+    IDENTICAL result in Spark and in the DuckDB twin for every trained
+    ANN query (the twin's basef/smpf/fitb filters mirror the per-space
+    filters of kmeans_fit_multi, whole-vector and sliced)."""
     import sys
 
     sys.path.insert(0, "tests")
@@ -186,7 +190,7 @@ def test_ivf_twin_parity_on_dirty_embeddings(spark, tmp_path):
         f"CREATE VIEW embeddings AS SELECT * FROM "
         f"read_parquet('{sf}/embeddings.parquet/*.parquet')"
     )
-    fn, sql = QUERIES["ann_ivf_multiprobe"]
+    fn, sql = QUERIES[name]
     r = compare(fn(spark, sf), con, sql)
     assert r["match"], r
 
